@@ -32,13 +32,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from pyspark.storagelevel import StorageLevel
-
 from ..ckpt import ckpt as _ckpt
-
 from ..keys import node_key_col, sanitize_col
-
-_SER = StorageLevel.MEMORY_AND_DISK  # serialized checkpoint blocks
 
 KEY = ["repo", "lang"]
 

@@ -11,7 +11,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..ckpt import ckpt as _ckpt
+
 KEY = ["repo", "lang"]
+PREFIX_KINDS = ["ep_prefix_handler", "ep_prefix_rocket", "ep_prefix_import",
+                "ep_group_use"]
 
 
 def endpoint_prefixes(mention: DataFrame, eps: DataFrame,
@@ -90,11 +94,12 @@ def endpoint_prefixes(mention: DataFrame, eps: DataFrame,
 
 def apply_endpoint_groups(ex_nodes: DataFrame, mention: DataFrame,
                           imports_map: DataFrame) -> tuple[DataFrame, DataFrame]:
-    eps = ex_nodes.where(F.col("node_type") == "Endpoint")
-    renames = endpoint_prefixes(mention, eps, imports_map)
-    if renames.isEmpty():
+    # gate on the prefix facts (endpoint_prefixes reads no other mention
+    # kind): a scan of the extraction checkpoint, not of the rename plan
+    if mention.where(F.col("m_kind").isin(PREFIX_KINDS)).isEmpty():
         return ex_nodes, mention
-    renames = renames.localCheckpoint()
+    eps = ex_nodes.where(F.col("node_type") == "Endpoint")
+    renames = _ckpt(endpoint_prefixes(mention, eps, imports_map))
 
     new_eps = (eps.withColumn("verb", F.element_at("meta", "verb"))
                .join(renames, KEY + ["name", "file", "start", "verb"], "left")

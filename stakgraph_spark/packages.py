@@ -14,13 +14,18 @@ ast/src/repo.rs:213-265) as pure DataFrame ops over the source table:
 * framework detection from manifest content (next/react/express/fastify,
   axum/actix, gin/gorilla) lands in meta.framework
 * edges: Repository -CONTAINS-> Package, Package -OF-> Language,
-  Package -CONTAINS-> Directory (dangling targets are cleaned by the prune
-  plane's endpoint semijoin, mirroring the reference's find-first-or-skip)
+  Package -CONTAINS-> Directory, exploded from one row per package
+  (dangling targets are cleaned by the prune plane's endpoint semijoin,
+  mirroring the reference's find-first-or-skip)
+
+The root and workspace rules are per-repo windows, so the source scan
+appears twice in the plan (markers + root depth) rather than once per
+self-join branch.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .keys import node_key_col
@@ -84,21 +89,16 @@ def detect_packages(src: DataFrame) -> tuple[DataFrame, DataFrame]:
                    F.col("p.base").alias("base"),
                    F.col("p.content").alias("content")))
 
-    # root package only when its language isn't covered by a child package
-    children = pkg.where(F.col("depth") > 0)
-    child_langs = (children.groupBy("repo")
-                   .agg(F.collect_set("plang").alias("clangs")))
-    root = (pkg.where(F.col("depth") == 0)
-            .join(child_langs, "repo", "left")
-            .where(F.coalesce(
-                ~F.array_contains("clangs", F.col("plang")), F.lit(True)))
-            .drop("clangs"))
-    pkg = children.unionByName(root)
-
-    # workspace gate: >= 2 packages per repo
-    counts = pkg.groupBy("repo").agg(F.count("*").alias("n"))
-    pkg = pkg.join(counts.where(F.col("n") >= 2).select("repo"), "repo",
-                   "leftsemi")
+    # root package only when its language isn't covered by a child package;
+    # then the workspace gate: >= 2 packages per repo.  Windows over the
+    # repo instead of self-joins keep the source scan once in the plan.
+    w = Window.partitionBy("repo")
+    pkg = (pkg.withColumn("clangs", F.collect_set(
+               F.when(F.col("depth") > 0, F.col("plang"))).over(w))
+           .where((F.col("depth") > 0)
+                  | ~F.array_contains("clangs", F.col("plang")))
+           .withColumn("n", F.count("*").over(w))
+           .where(F.col("n") >= 2))
 
     # framework detection (workspace/mod.rs:32-79)
     c = F.coalesce(F.col("content"), F.lit(""))
@@ -133,24 +133,18 @@ def detect_packages(src: DataFrame) -> tuple[DataFrame, DataFrame]:
         "repo", F.col("plang").alias("lang"))
 
     pkey = node_key_col(F.lit("Package"), F.col("name"), F.col("file"), F.lit(0))
-    edges = (
-        pkg.select(
-            "repo", F.col("plang").alias("lang"),
-            F.lit("Contains").alias("edge_type"),
-            node_key_col(F.lit("Repository"), F.col("repo"), F.lit(""),
-                         F.lit(0)).alias("src_key"),
-            pkey.alias("dst_key"))
-        .unionByName(pkg.select(
-            "repo", F.col("plang").alias("lang"),
-            F.lit("Of").alias("edge_type"),
-            pkey.alias("src_key"),
-            node_key_col(F.lit("Language"), F.col("plang"), F.lit(""),
-                         F.lit(0)).alias("dst_key")))
-        .unionByName(pkg.where(F.col("file") != "").select(
-            "repo", F.col("plang").alias("lang"),
-            F.lit("Contains").alias("edge_type"),
-            pkey.alias("src_key"),
-            node_key_col(F.lit("Directory"),
-                         F.element_at(F.split("file", "/"), -1),
-                         F.col("file"), F.lit(0)).alias("dst_key"))))
+
+    def edge(edge_type, src_key, dst_key):
+        return F.struct(F.lit(edge_type).alias("edge_type"),
+                        src_key.alias("src_key"), dst_key.alias("dst_key"))
+
+    edges = (pkg.select("repo", F.col("plang").alias("lang"), F.explode(F.array(
+        edge("Contains", node_key_col(F.lit("Repository"), F.col("repo"),
+                                      F.lit(""), F.lit(0)), pkey),
+        edge("Of", pkey, node_key_col(F.lit("Language"), F.col("plang"),
+                                      F.lit(""), F.lit(0))),
+        F.when(F.col("file") != "", edge("Contains", pkey, node_key_col(
+            F.lit("Directory"), F.element_at(F.split("file", "/"), -1),
+            F.col("file"), F.lit(0)))))).alias("e"))
+        .where(F.col("e").isNotNull()).select("repo", "lang", "e.*"))
     return nodes, edges

@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import os
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -215,12 +216,37 @@ def file_plane(src: DataFrame) -> tuple[DataFrame, DataFrame]:
     return nodes, _norm_edges(edges)
 
 
+def _subunion_k() -> int:
+    """Edge families per sub-union checkpoint (STAKGRAPH_SUBUNION_K)."""
+    val = os.environ.get("STAKGRAPH_SUBUNION_K", "5")
+    try:
+        k = int(val)
+    except ValueError:
+        k = 0
+    if k < 1:
+        raise ValueError(
+            f"STAKGRAPH_SUBUNION_K must be a positive integer, got {val!r}")
+    return k
+
+
 def build_graph(spark: SparkSession, source: DataFrame,
                 raw: DataFrame | None = None) -> GraphResult:
     """source (repo,path,commit,lang,content) -> GraphResult.
 
     `raw` may be a pre-materialized extraction stream (the resumable runner
     persists it per (repo, lang) partition and re-feeds it on restart)."""
+    subunion_k = _subunion_k()
+    # CONCURRENT DRIVER THREADS (guide §2.6): independent jobs and their
+    # Catalyst analysis overlap across driver threads throughout the build.
+    pool = ThreadPoolExecutor(max_workers=12)
+    try:
+        return _build(spark, source, raw, pool, subunion_k)
+    finally:
+        pool.shutdown(wait=False, cancel_futures=True)
+
+
+def _build(spark: SparkSession, source: DataFrame, raw: DataFrame | None,
+           pool: ThreadPoolExecutor, subunion_k: int) -> GraphResult:
     metrics: list[dict] = []
     t0 = time.time()
 
@@ -248,11 +274,6 @@ def build_graph(spark: SparkSession, source: DataFrame,
     except (TypeError, ValueError):
         n_part = spark.sparkContext.defaultParallelism * 4
     src = src.repartition(n_part, "repo", "lang", "path")
-
-    # CONCURRENT DRIVER THREADS (guide §2.6): independent jobs and their
-    # Catalyst analysis overlap across driver threads throughout the build.
-    from concurrent.futures import ThreadPoolExecutor
-    pool = ThreadPoolExecutor(max_workers=12)
 
     # localCheckpoint: the RAW stream feeds ~10 downstream join families;
     # truncating lineage here keeps each family's plan shallow (Catalyst
@@ -441,7 +462,7 @@ def build_graph(spark: SparkSession, source: DataFrame,
     # (3 aggregation stages instead of ~12 per-family ones); eager: every
     # family job reads the materialized RDD instead of recomputing
     fut_symtab = pool.submit(
-        lambda: _ckpt(simple_link.build_symtab(nodes)))
+        lambda n: _ckpt(simple_link.build_symtab(n)), nodes)
     symtab = fut_symtab.result()
 
     # Families that depend only on nodes/mention/symtab are CONSTRUCTED here,
@@ -669,8 +690,8 @@ def build_graph(spark: SparkSession, source: DataFrame,
         for e in checked[1:]:
             edges = edges.unionByName(e)
     else:
-        k = int(os.environ.get("STAKGRAPH_SUBUNION_K", "5"))
-        groups = [fams[i:i + k] for i in range(0, len(fams), k)]
+        groups = [fams[i:i + subunion_k]
+                  for i in range(0, len(fams), subunion_k)]
 
         def _sub(g):
             u = _norm_edges_h(g[0])
@@ -707,8 +728,11 @@ def build_graph(spark: SparkSession, source: DataFrame,
     # that gained an indirect test) and its values are deterministic
     # (distinct sets + an order-insensitive min_by arg-min), so the
     # checkpoint cannot perturb the output.
+    # arguments bound at submit time: the main thread rebinds `edges` to
+    # the pruned table below while this job may still be planning
     fut_ind = pool.submit(
-        lambda: _ckpt(api_link.indirect_test_endpoints(nodes_final, edges)))
+        lambda n, e: _ckpt(api_link.indirect_test_endpoints(n, e)),
+        nodes_final, edges)
 
     # fat-companion body table, same overlap treatment as `ind` (it
     # depends only on the RAW checkpoint): dedup-to-unique key_h is
@@ -736,7 +760,6 @@ def build_graph(spark: SparkSession, source: DataFrame,
     nodes, edges = prune_graph(nodes_final, edges, pool=pool,
                                slim=fut_slim.result(), full=nodes)
     ind = fut_ind.result()
-    pool.shutdown(wait=False)
 
     nodes = (nodes.join(ind, "key_h", "left")
              .withColumn(

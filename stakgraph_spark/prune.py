@@ -12,19 +12,22 @@ plane needs anyway, so the re-attachment costs zero extra shuffles.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from .ckpt import ckpt as _ckpt
-
-_SER = StorageLevel.MEMORY_AND_DISK  # serialized blocks (deser default thrashes GC)
 
 # per-language clean_graph directives (dispatch ast/src/builder/stages.rs:628-640)
 #   dedup:   remove <remove_type> when a <keep_type> with same (name,file) has
 #            OPERAND edges   (python.rs clean_graph)
 #   filter:  remove <parent_type> whose name never appears as any
 #            <child_type>'s meta[<key>]   (go.rs clean_graph "operand")
+# prune_graph computes every directive's drop set independently, which
+# equals running them in sequence only while no directive reads a node
+# another directive removes: each reads and removes nodes of its own
+# language only, and a keep_type is never a Function.
 CLEAN_DIRECTIVES: dict[str, list[tuple[str, ...]]] = {
     "python": [("dedup", "DataModel", "Class")],
     "go": [("filter", "Class", "Function", "operand")],
@@ -34,36 +37,41 @@ CLEAN_DIRECTIVES: dict[str, list[tuple[str, ...]]] = {
 
 
 def dedup_datamodels_vs_classes(nodes: DataFrame, edges: DataFrame,
-                                lang: str, remove_t: str, keep_t: str) -> DataFrame:
-    """Remove a <remove_t> when a <keep_t> with the same (name, file) has
-    OPERAND edges (btreemap_graph.rs:718-754)."""
+                                removed: DataFrame, lang: str,
+                                remove_t: str, keep_t: str) -> DataFrame:
+    """key_h of each <remove_t> for which a <keep_t> with the same (name,
+    file) has OPERAND edges (btreemap_graph.rs:718-754).  The reference's
+    remove_node drops a node's edges with it, so an Operand edge whose dst
+    Function is in `removed` (orphan-pruned) is no keeper evidence."""
     operand_srcs = (edges.where(F.col("edge_type") == "Operand")
+                    .join(removed.withColumnRenamed("key_h", "dst_h"),
+                          "dst_h", "left_anti")
                     .select(F.col("src_h")).distinct())
     keepers = (nodes.where((F.col("node_type") == keep_t) & (F.col("lang") == lang))
                .join(operand_srcs,
                      nodes["key_h"] == operand_srcs["src_h"], "leftsemi")
                .select("repo", "lang", "name", "file").distinct())
     dms = nodes.where((F.col("node_type") == remove_t) & (F.col("lang") == lang))
-    drop = dms.join(keepers, ["repo", "lang", "name", "file"],
+    return dms.join(keepers, ["repo", "lang", "name", "file"],
                     "leftsemi").select("key_h")
-    return nodes.join(drop, "key_h", "left_anti")
 
 
-def filter_parents_without_children(nodes: DataFrame, lang: str,
-                                    parent_t: str, child_t: str,
+def filter_parents_without_children(nodes: DataFrame, removed: DataFrame,
+                                    lang: str, parent_t: str, child_t: str,
                                     meta_key: str) -> DataFrame:
-    """Remove <parent_t> nodes whose name never appears as a <child_t>'s
-    meta[<meta_key>] (btreemap_graph.rs:664-706; name-only matching)."""
+    """key_h of each <parent_t> whose name never appears as the
+    meta[<meta_key>] of a <child_t> outside `removed`
+    (btreemap_graph.rs:664-706; name-only matching)."""
     child_names = (nodes.where((F.col("node_type") == child_t)
                                & (F.col("lang") == lang))
+                   .join(removed, "key_h", "left_anti")
                    .select("repo", "lang",
                            F.element_at("meta", meta_key).alias("name"))
                    .where(F.col("name").isNotNull()).distinct())
     parents = nodes.where((F.col("node_type") == parent_t)
                           & (F.col("lang") == lang))
-    drop = parents.join(child_names, ["repo", "lang", "name"],
+    return parents.join(child_names, ["repo", "lang", "name"],
                         "left_anti").select("key_h")
-    return nodes.join(drop, "key_h", "left_anti")
 
 
 def prune_orphan_functions(nodes: DataFrame, edges: DataFrame) -> DataFrame:
@@ -141,12 +149,13 @@ def prune_graph(nodes: DataFrame, edges: DataFrame,
     fixed cost dominated the link plane's wall clock at bench scale.
 
     All removal logic runs over a SLIM projection (no bodies) joined on the
-    8-byte key_h surrogate.  Edges touching removed nodes are dropped solely
-    by the final endpoint joins — a removed node can never be a kept key, so
-    separate removed-edge anti-joins are redundant.  Those final joins are
-    INNER joins against (key_h, node_key), so they simultaneously drop
-    dangling edges AND swap the surrogates back to canonical key strings:
-    the returned edge table is the public EDGE_COLS shape, surrogate-free."""
+    8-byte key_h surrogate.  The orphan prune and each CLEAN_DIRECTIVES
+    entry yield a drop set read from slim; `keys` is slim minus their
+    union, so each directive adds one subtree to the plan.  Edges touching
+    removed nodes are dropped solely by the final endpoint joins — INNER
+    joins against (key_h, node_key) that both drop dangling edges and swap
+    the surrogates back to canonical key strings: the returned edge table
+    is the public EDGE_COLS shape, surrogate-free."""
     # slim IS checkpointed: the incoming nodes plan carries the endpoint-drop
     # anti-join over the call cascade, and prune_orphan + the directives read
     # slim ~8 times — uncheckpointed, each read replays the cascade.
@@ -160,29 +169,20 @@ def prune_graph(nodes: DataFrame, edges: DataFrame,
                                   "meta"))
 
     removed = prune_orphan_functions(slim, edges)
-    slim = slim.join(removed, "key_h", "left_anti")
-
-    # the reference's remove_node drops a node's edges with it — the dedup
-    # directive must not count an Operand edge whose dst Function was just
-    # orphan-pruned as keeper evidence (orphan-pruned nodes are all
-    # Functions, and Operand dsts are Functions, so dst is the only side
-    # that can dangle here).  This filtered view feeds ONLY the directives:
-    # the final endpoint joins below use the raw checkpointed edge table,
-    # where re-running the `removed` subtree would be pure duplicated work.
-    edges_for_directives = edges.join(
-        removed.withColumnRenamed("key_h", "dst_h"), "dst_h", "left_anti")
-
+    drops = [removed]
     for lang, directives in CLEAN_DIRECTIVES.items():
-        for d in directives:
-            if d[0] == "dedup":
-                slim = dedup_datamodels_vs_classes(
-                    slim, edges_for_directives, lang, d[1], d[2])
-            elif d[0] == "filter":
-                slim = filter_parents_without_children(slim, lang, d[1], d[2], d[3])
+        for kind, *args in directives:
+            if kind == "dedup":
+                drops.append(dedup_datamodels_vs_classes(
+                    slim, edges, removed, lang, *args))
+            elif kind == "filter":
+                drops.append(filter_parents_without_children(
+                    slim, removed, lang, *args))
 
-    keys = _ckpt(slim.select("key_h", "node_key"))
+    keys = _ckpt(slim.join(reduce(DataFrame.unionByName, drops), "key_h",
+                           "left_anti").select("key_h", "node_key"))
     # `keys` already encodes EVERY drop (slim was built from the filtered
-    # node view, then lost `removed` + the directive hits), so the two final
+    # node view, then lost every drop set), so the two final
     # materializations filter the RAW CHECKPOINTED tables by keys alone —
     # re-running the anti-join subtrees (removed / instance-filter /
     # endpoint-drop) inside these jobs recomputed each of them a second

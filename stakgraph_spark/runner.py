@@ -133,6 +133,7 @@ class PipelineRunner:
 
     # ---------------- stages ----------------
     def run(self, source: DataFrame) -> dict:
+        from .ckpt import ckpt
         from .extract import extract_raw
         from .pipeline import build_graph
         from .source import with_skip_flags
@@ -188,9 +189,12 @@ class PipelineRunner:
         # rewrites changed partitions) and schema inference samples ONE
         # footer — old rows surface the missing columns as NULL instead,
         # which the consumers already handle (ADVICE r04)
-        from .schema import RAW_SCHEMA
+        # (a source with nothing to extract leaves no raw table: build over
+        # an empty stream of the same schema)
+        from .schema import EDGES_SCHEMA, NODES_SCHEMA, RAW_SCHEMA
         raw = (self.spark.read.schema(RAW_SCHEMA).parquet(self.raw_path)
-               if os.path.exists(self.raw_path) else None)
+               if os.path.exists(self.raw_path)
+               else self.spark.createDataFrame([], RAW_SCHEMA))
         self._metric("extract", (time.time() - t0) * 1000,
                      {"partitions_total": n_parts,
                       "partitions_skipped": n_parts - n_todo,
@@ -209,7 +213,7 @@ class PipelineRunner:
                 or not os.path.exists(os.path.join(nodes_path, "_SUCCESS")):
             # keep only raw rows for partitions present in this source
             raw = raw.join(parts, ["repo", "lang"], "leftsemi")
-            g = build_graph(self.spark, source, raw=raw.localCheckpoint())
+            g = build_graph(self.spark, source, raw=ckpt(raw))
             (g.nodes.write.mode("overwrite").partitionBy("repo", "lang")
              .parquet(nodes_path))
             (g.edges.write.mode("overwrite").partitionBy("repo", "lang")
@@ -224,8 +228,10 @@ class PipelineRunner:
         else:
             link_rebuilt = False
 
-        nodes = self.spark.read.parquet(nodes_path)
-        edges = self.spark.read.parquet(edges_path)
+        # explicit schemas: an empty graph leaves no parquet footer to infer
+        # one from
+        nodes = self.spark.read.schema(NODES_SCHEMA).parquet(nodes_path)
+        edges = self.spark.read.schema(EDGES_SCHEMA).parquet(edges_path)
         node_counts = {r["node_type"]: r["count"] for r in
                        nodes.groupBy("node_type").count().collect()}
         edge_counts = {r["edge_type"]: r["count"] for r in

@@ -83,3 +83,91 @@ def test_package_edges(mono_graph):
                 .select("src_key", "dst_key").collect()}
     covered = {d for (s, d) in contains if d in pkg_keys and s in repo_keys}
     assert covered == pkg_keys, "every Package hangs off its Repository"
+
+
+# ---- detect_packages over inline rows (no fixture tree needed) ----
+
+INLINE_ROWS = [
+    # "mono": every path carries a "ws/" prefix, so depth counts from the
+    # repo's shallowest file.  The root pyproject.toml is python, which the
+    # libs/common child covers -> no root package.  A [workspace]-only
+    # Cargo.toml and a "workspaces" package.json are workspace roots, not
+    # packages.
+    ("mono", "ws/main.py", "print(1)\n"),
+    ("mono", "ws/pyproject.toml", "[project]\nname = 'mono'\n"),
+    ("mono", "ws/libs/common/setup.py", "from setuptools import setup\n"),
+    ("mono", "ws/svc/proc/Cargo.toml",
+     '[package]\nname = "proc"\n[dependencies]\naxum = "0.7"\n'),
+    ("mono", "ws/crates/Cargo.toml", '[workspace]\nmembers = ["a"]\n'),
+    ("mono", "ws/site/package.json", '{"workspaces": ["a"], "next": 1}\n'),
+    ("mono", "ws/fe/package.json", '{"dependencies": {"next": "14"}}\n'),
+    # "keeps": the root go.mod's language is not covered by a child, so the
+    # root package stays; Cargo.toml outranks package.json in one directory
+    ("keeps", "go.mod", "module keeps\nrequire github.com/gin-gonic/gin\n"),
+    ("keeps", "tools/package.json", '{"dependencies": {"react": "18"}}\n'),
+    ("keeps", "svc/Cargo.toml", '[package]\nname = "svc"\n'),
+    ("keeps", "svc/package.json", '{"dependencies": {"express": "4"}}\n'),
+    # "single": one package only -> below the workspace gate, no Package
+    ("single", "requirements.txt", "flask\n"),
+    ("single", "app/main.py", "print(1)\n"),
+]
+
+
+@pytest.fixture(scope="module")
+def inline_packages(spark):
+    from stakgraph_spark.packages import detect_packages
+
+    src = spark.createDataFrame(
+        [(r, p, "c0", "x", c) for r, p, c in INLINE_ROWS],
+        "repo string, path string, commit string, lang string, "
+        "content string")
+    nodes, edges = detect_packages(src)
+    return ([r.asDict() for r in nodes.collect()],
+            [r.asDict() for r in edges.collect()])
+
+
+def _key(spark, t, name, file):
+    from pyspark.sql import functions as F
+    from stakgraph_spark.keys import node_key_col
+    return spark.range(1).select(node_key_col(
+        F.lit(t), F.lit(name), F.lit(file), F.lit(0))).first()[0]
+
+
+def test_inline_package_nodes(inline_packages):
+    nodes, _ = inline_packages
+    got = {(n["repo"], n["name"], n["file"], n["lang"],
+            tuple(sorted(n["meta"].items()))) for n in nodes}
+    assert got == {
+        ("mono", "common", "ws/libs/common", "python",
+         (("language", "python"),)),
+        ("mono", "proc", "ws/svc/proc", "rust",
+         (("framework", "axum"), ("language", "rust"))),
+        ("mono", "fe", "ws/fe", "typescript",
+         (("framework", "next"), ("language", "typescript"))),
+        ("keeps", "keeps", "", "go",
+         (("framework", "gin"), ("language", "go"))),
+        ("keeps", "tools", "tools", "typescript",
+         (("framework", "react"), ("language", "typescript"))),
+        ("keeps", "svc", "svc", "rust", (("language", "rust"),)),
+    }, got
+    assert all(n["node_type"] == "Package" and n["start"] == 0
+               for n in nodes)
+
+
+def test_inline_package_edges(spark, inline_packages):
+    nodes, edges = inline_packages
+    want = set()
+    for n in nodes:
+        pkey = _key(spark, "Package", n["name"], n["file"])
+        want.add((n["repo"], n["lang"], "Contains",
+                  _key(spark, "Repository", n["repo"], ""), pkey))
+        want.add((n["repo"], n["lang"], "Of", pkey,
+                  _key(spark, "Language", n["lang"], "")))
+        if n["file"]:
+            want.add((n["repo"], n["lang"], "Contains", pkey,
+                      _key(spark, "Directory", n["file"].split("/")[-1],
+                           n["file"])))
+    got = [(e["repo"], e["lang"], e["edge_type"], e["src_key"], e["dst_key"])
+           for e in edges]
+    assert len(got) == len(set(got)) == len(want) == 3 * 6 - 1
+    assert set(got) == want

@@ -198,3 +198,35 @@ def test_fulltext_index_stage(spark):
         assert ft[0]["distinct_terms"] > 0
     finally:
         shutil.rmtree(workdir, ignore_errors=True)
+
+
+def test_runner_over_empty_source(spark):
+    """A source with nothing to extract leaves no raw table and an empty
+    graph; the runner builds over an empty extraction stream, and the next
+    run in the same workdir still reads its graph back."""
+    from stakgraph_spark.pipeline import build_graph
+    from stakgraph_spark.runner import PipelineRunner
+    from stakgraph_spark.schema import SOURCE_SCHEMA
+
+    workdir = tempfile.mkdtemp(prefix="kg_empty_")
+    try:
+        out = PipelineRunner(spark, workdir, run_id="empty").run(
+            spark.createDataFrame([], SOURCE_SCHEMA))
+        assert out["extracted_partitions"] == 0
+        assert out["link_rebuilt"]
+        assert out["node_counts"] == {} and out["edge_counts"] == {}
+
+        src = spark.createDataFrame(
+            [("one", "app.py", "c0", "python",
+              "def f():\n    return g()\n\ndef g():\n    return 1\n")],
+            SOURCE_SCHEMA)
+        out = PipelineRunner(spark, workdir, run_id="one").run(src)
+        assert out["extracted_partitions"] == 1
+        assert out["node_counts"]["Function"] == 2
+        assert out["edge_counts"]["Calls"] == 1
+        fresh = build_graph(spark, src)
+        assert ({r["node_key"] for r in
+                 spark.read.parquet(out["nodes_path"]).collect()}
+                == {r["node_key"] for r in fresh.nodes.collect()})
+    finally:
+        shutil.rmtree(workdir, ignore_errors=True)
