@@ -9,18 +9,16 @@ Default mode — the driver's per-round benchmark:
     /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]
   * prints ONE JSON line {"metric", "value", "unit": "sec", "queries", "sf"}
 
-Scaling mode — the north rule's two-cluster-size evidence:
-    python bench.py --scaling
-  runs the identical KG build at local[8] and local[32] (subprocesses; one
-  JVM each) and writes BENCH/BASELINE.md with throughput at both levels and
-  efficiency = (rate32/rate8)/4 (target >= 0.8, BASELINE.md).
+KG-only mode — the graph build alone, cold then warm, in one JVM:
+    python bench.py --kg-only CPUS COPIES [REPS]
+  prints one JSON line with every rep's wall, files/sec, process-tree CPU
+  and per-stage core utilization.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import subprocess
 import sys
 import time
 
@@ -287,81 +285,6 @@ def _stage_util(stages: list[dict], samples: list[tuple[float, float]],
     return out
 
 
-def _hw_burn(n):  # module-level: must be picklable for mp.Pool
-    import hashlib
-    h = hashlib.md5()
-    s = b"x" * 4096
-    for _ in range(n):
-        h.update(s)
-
-
-def _hw_burn_rand(seed):
-    """Random-gather working set — the memory-access shape of hash joins /
-    shuffles.  This is the calibration that actually predicts the
-    pipeline's scaling ceiling: sequential-bandwidth and cache-resident
-    compute both scale ~3.9x/4x on this container, random access does not
-    (measured 2.87x at round 4)."""
-    import numpy as np
-    rng = np.random.RandomState(seed)
-    a = np.arange(16 * 1024 * 1024, dtype=np.int64)   # 128 MB
-    idx = rng.randint(0, a.size, 4 * 1024 * 1024)
-    s = 0
-    for _ in range(12):
-        s += int(a[idx].sum())
-    return s
-
-
-def _pin_init(mask_n):  # pool initializer: same affinity regime as the legs
-    os.sched_setaffinity(0, set(range(mask_n)))
-
-
-def hw_calibration(levels: tuple[int, int]) -> dict:
-    """Measured scaling ceilings of THIS machine between the two worker
-    counts, for two workload shapes: cache-resident compute (md5 loop) and
-    random-gather memory access (the hash-join/shuffle shape).  The
-    pipeline's efficiency is reported raw AND relative to both.
-
-    Under SPARK_GRAFT_PIN=1 each calibration pool is pinned to the same
-    0..N-1 core mask its pipeline leg runs under (ADVICE r04: an unpinned
-    calibration measures a different affinity regime than the efficiency it
-    normalizes)."""
-    import multiprocessing as mp
-
-    pin = bool(os.environ.get("SPARK_GRAFT_PIN"))
-
-    def _pool(workers):
-        if pin:
-            return mp.Pool(workers, initializer=_pin_init,
-                           initargs=(workers,))
-        return mp.Pool(workers)
-
-    def rate(workers, n=150_000):
-        with _pool(workers) as p:
-            t0 = time.time()
-            p.map(_hw_burn, [n] * workers)
-            return workers * n / (time.time() - t0)
-
-    def rate_rand(workers):
-        with _pool(workers) as p:
-            t0 = time.time()
-            p.map(_hw_burn_rand, list(range(workers)))
-            return workers / (time.time() - t0)
-
-    r1 = max(rate(levels[0]) for _ in range(2))
-    r2 = max(rate(levels[1]) for _ in range(2))
-    g1 = max(rate_rand(levels[0]) for _ in range(2))
-    g2 = max(rate_rand(levels[1]) for _ in range(2))
-    span = levels[1] / levels[0]
-    # keys embed the actual worker counts so the persisted artifact stays
-    # self-describing for arbitrary (lo, hi) level pairs, not just 1:4
-    return {f"rate_{levels[0]}w": r1, f"rate_{levels[1]}w": r2,
-            "levels": list(levels),
-            "hw_ratio": round(r2 / r1, 3),
-            "hw_ceiling": round((r2 / r1) / span, 3),
-            "randmem_ratio": round(g2 / g1, 3),
-            "randmem_ceiling": round((g2 / g1) / span, 3)}
-
-
 def _tree_cpu_sec() -> float:
     """utime+stime+cutime+cstime of this process and every descendant (JVM,
     python workers) — the serial-fraction detector: if the pipeline's CPU
@@ -396,262 +319,9 @@ def _tree_cpu_sec() -> float:
     return sum(procs[p][1] for p in desc if p in procs) / 100.0
 
 
-def gate_calibration(levels: tuple[int, int],
-                     lo: float = 0.48, hi: float = 1.05,
-                     max_probes: int = 20, sleep_s: int = 60) -> list[float]:
-    """Round-5 protocol, now in code: launch a scaling pair only after TWO
-    consecutive random-gather calibration probes land in [lo, hi] — a probe
-    outside the band means a co-tenant is squatting on the memory system
-    and the pair would measure the neighbor, not the pipeline (the excluded
-    r5 run's own calibration read 0.366 and one rep's cascade stage ran at
-    0.08 core-util).  Returns the accepted probe values; raises after
-    max_probes so an unusable window fails loudly instead of burning hours."""
-    import multiprocessing as mp
-
-    pin = bool(os.environ.get("SPARK_GRAFT_PIN"))
-
-    def probe() -> float:
-        vals = []
-        for workers in levels:
-            if pin:
-                p = mp.Pool(workers, initializer=_pin_init, initargs=(workers,))
-            else:
-                p = mp.Pool(workers)
-            with p:
-                t0 = time.time()
-                p.map(_hw_burn_rand, list(range(workers)))
-                vals.append(workers / (time.time() - t0))
-        span = levels[1] / levels[0]
-        return round((vals[1] / vals[0]) / span, 3)
-
-    ok: list[float] = []
-    for i in range(max_probes):
-        v = probe()
-        print(f"# gate probe {i + 1}: randmem ceiling {v}", file=sys.stderr)
-        if lo <= v <= hi:
-            ok.append(v)
-            if len(ok) >= 2:
-                return ok
-        else:
-            ok = []
-            time.sleep(sleep_s)
-    raise RuntimeError(
-        f"calibration gate: no 2 consecutive probes in [{lo}, {hi}] after "
-        f"{max_probes} attempts — machine contended, not a usable window")
-
-
-def run_scaling(copies: int, levels: tuple[int, int] = (2, 8),
-                reps: int = 2, tag: str = "",
-                hw0: dict | None = None,
-                flip_order: bool = False) -> dict:
-    os.makedirs("BENCH", exist_ok=True)
-    # calibrate FIRST and persist every leg as it lands: a late failure must
-    # never lose an hour-long measurement again
-    if hw0 is None:
-        hw0 = hw_calibration(levels)
-    # SPARK_GRAFT_PIN=1 pins each leg's WHOLE process tree (JVM, python
-    # workers, GC/compiler threads) to exactly N cores via taskset — the
-    # faithful reading of the north rule's "N vs 4N cores".  Unpinned
-    # local[N] only bounds concurrent tasks: auxiliary threads free-ride on
-    # the machine's other cores, inflating the low leg's rate (measured
-    # core_util 1.1 at local[2]) and depressing the reported efficiency.
-    pin = bool(os.environ.get("SPARK_GRAFT_PIN"))
-    by_cpus = {}
-    # flip_order runs the high leg first — alternating leg order across a
-    # multi-pair session decorrelates slow co-tenant drift from the
-    # leg-order covariate (the r5 single-pair headline was vulnerable to
-    # exactly that: a throttled low leg flatters efficiency)
-    order = list(reversed(levels)) if flip_order else list(levels)
-    for cpus in order:
-        cmd = [sys.executable, __file__, "--kg-only", str(cpus), str(copies),
-               str(reps)]
-        if pin:
-            cmd = ["taskset", "-c", f"0-{cpus - 1}" if cpus > 1 else "0"] + cmd
-        out = subprocess.run(cmd, capture_output=True, text=True,
-                             timeout=14000)
-        line = [ln for ln in out.stdout.splitlines() if ln.startswith("{")][-1]
-        by_cpus[cpus] = json.loads(line)
-        with open(f"BENCH/leg_local{cpus}_c{copies}{tag}.json", "w") as f:
-            f.write(line)
-    rn, r4n = by_cpus[levels[0]], by_cpus[levels[1]]
-    results = [rn, r4n]
-    n1, n2 = levels
-    eff = (r4n["files_per_sec"] / rn["files_per_sec"]) / (n2 / n1)
-    hw = hw0
-    rel = round(eff / hw["hw_ceiling"], 3) if hw["hw_ceiling"] else None
-    rel_rand = round(eff / hw["randmem_ceiling"], 3) \
-        if hw.get("randmem_ceiling") else None
-    hi_util = max(x["core_util"] for x in r4n["runs"]) \
-        if r4n["runs"] and "core_util" in r4n["runs"][0] else None
-    # narrative must follow the measured number (a round-4 report shipped
-    # "the cores are busy" next to a 0.744 utilization): below 0.9 the idle
-    # fraction — materialization-barrier tails — is named as such
-    if hi_util is None:
-        util_note = "(no per-rep CPU accounting available for this run)"
-    elif hi_util >= 0.9:
-        util_note = (
-            "the cores are essentially busy; the residual gap to 1.0 x "
-            "ideal is CPU-work inflation under memory contention (total "
-            "CPU-sec rises between the two legs for identical input), not "
-            "a driver serial section")
-    else:
-        util_note = (
-            f"i.e. ~{round((1 - hi_util) * 100)}% of core-time is IDLE — "
-            "materialization-barrier tails (stage-checkpoint stragglers) "
-            "plus any scheduler gaps; the rest of the efficiency gap is "
-            "CPU-work inflation under memory contention (total CPU-sec "
-            "rises between the two legs for identical input)")
-    os.makedirs("BENCH", exist_ok=True)
-    rep_rows = "\n".join(
-        f"| local[{r['cpus']}] rep {i + 1} | {x['sec']} | {x['files_per_sec']} "
-        f"| {x.get('cpu_sec', '')} | {x.get('core_util', '')} |"
-        for r in results for i, x in enumerate(r["runs"]))
-    pin_note = (" — process tree PINNED to N cores via taskset (the "
-                "faithful N-vs-4N-cores reading)" if pin else
-                " — unpinned local[N] (aux threads free-ride; low leg's "
-                "effective cores > N)")
-    with open(f"BENCH/scaling_{n1}v{n2}_{rn['files']}{tag}.md", "w") as f:
-        f.write(f"""# Scaling run — local[{n1}] vs local[{n2}], {rn['files']} files{pin_note}
-
-| parallelism | files | wall sec (best) | files/sec (best) | nodes | edges |
-|---|---|---|---|---|---|
-| local[{n1}]  (N)  | {rn['files']} | {rn['sec']} | {rn['files_per_sec']} | {rn['nodes']} | {rn['edges']} |
-| local[{n2}] (4N) | {r4n['files']} | {r4n['sec']} | {r4n['files_per_sec']} | {r4n['nodes']} | {r4n['edges']} |
-
-**Scaling efficiency = (rate_4N / rate_N) / {n2 // n1} = {eff:.3f}** (target >= 0.8).
-
-Hardware calibration on THIS machine at run time, two workload shapes:
-
-* cache-resident compute (md5 loop): {hw['hw_ratio']}x of {n2 // n1}x ideal
-  = **{hw['hw_ceiling']:.3f} ceiling**
-* random-gather memory access (the hash-join/shuffle shape — 128 MB
-  working set, random 8-byte gathers): {hw['randmem_ratio']}x of
-  {n2 // n1}x ideal = **{hw['randmem_ceiling']:.3f} ceiling** for
-  embarrassingly parallel work of the link plane's shape
-
-Pipeline efficiency relative to the compute ceiling: **{rel}**; relative
-to the random-access ceiling: **{rel_rand}**.
-
-Serial-fraction check: at local[{n2}] the pipeline's process tree burned
-**{hi_util} of (wall x {n2} cores)** (CPU accounting over /proc, incl.
-JVM + python workers) — {util_note}.
-
-All reps (rep 1 cold JVM, rep 2+ warm JIT/codegen — the steady state of a
-long-running cluster; best-of defuses co-tenant CPU steal):
-
-| run | wall sec | files/sec | cpu sec | core util |
-|---|---|---|---|---|
-{rep_rows}
-
-Per-stage timings (best runs):
-
-```json
-{json.dumps({f'local{n1}': rn['stages'], f'local{n2}': r4n['stages']}, indent=2)}
-```
-""")
-    summary = {"efficiency": round(eff, 3), "levels": levels,
-               "pinned": pin, "hw": hw, "efficiency_vs_hw": rel,
-               "rn": rn, "r4n": r4n}
-    print(json.dumps(summary))
-    return summary
-
-
-def run_scaling_multi(copies: int, levels: tuple[int, int] = (2, 8),
-                      pairs: int = 3, reps: int = 2) -> None:
-    """VERDICT r05 #2: the efficiency headline must be a MEDIAN of >= `pairs`
-    calibration-gated same-run pairs, not one pair whose throttled low leg
-    can flatter the number (r5: 0.632 single-pair vs 0.503 conservative).
-
-    Each pair: (a) wait for the calibration gate — two consecutive
-    random-gather probes in [0.48, 1.05]; (b) run BOTH legs back-to-back in
-    the same window (leg order alternates across pairs to decorrelate
-    co-tenant drift); (c) persist the pair's own report + legs.  The summary
-    report leads with the median and the full spread."""
-    import statistics
-
-    os.makedirs("BENCH", exist_ok=True)
-    n1, n2 = levels
-    out = []
-    gate_failed = 0
-    for p in range(pairs):
-        try:
-            probes = gate_calibration(levels)
-        except RuntimeError as e:
-            # a pair whose window never calms is SKIPPED, not fatal: the
-            # completed gated pairs are the measurement (r6: pair 3's gate
-            # saw 20 contended probes and raised, losing the summary for
-            # two finished pairs)
-            print(f"# pair {p + 1} skipped: {e}", file=sys.stderr)
-            gate_failed += 1
-            continue
-        hw0 = hw_calibration(levels)
-        s = run_scaling(copies, levels, reps, tag=f"_p{p + 1}", hw0=hw0,
-                        flip_order=(p % 2 == 1))
-        s["gate_probes"] = probes
-        s["pair"] = p + 1
-        s["leg_order"] = f"local[{n2}] first" if p % 2 == 1 \
-            else f"local[{n1}] first"
-        out.append(s)
-        # persist incrementally: a late failure keeps the finished pairs
-        with open(f"BENCH/scaling_multi_{n1}v{n2}_partial.json", "w") as f:
-            json.dump(out, f)
-    if not out:
-        raise RuntimeError("no pair completed: every calibration gate "
-                           "failed — machine contended all session")
-    effs = sorted(s["efficiency"] for s in out)
-    med = statistics.median(effs)
-    pin = bool(os.environ.get("SPARK_GRAFT_PIN"))
-    files = out[0]["rn"]["files"]
-    rows = "\n".join(
-        f"| {s['pair']} | {s['leg_order']} | {s['gate_probes']} "
-        f"| {s['hw']['randmem_ceiling']} | {s['rn']['sec']} "
-        f"| {s['r4n']['sec']} | {s['rn']['files_per_sec']} "
-        f"| {s['r4n']['files_per_sec']} | **{s['efficiency']}** |"
-        for s in out)
-    with open(f"BENCH/scaling_multi_{n1}v{n2}_{files}.md", "w") as f:
-        f.write(f"""# Multi-pair scaling — local[{n1}] vs local[{n2}], {files} files, {len(out)} calibration-gated pairs{' (PINNED)' if pin else ''}
-
-**Headline scaling efficiency (median of {len(out)} gated same-run pairs) =
-{med:.3f}** (target >= 0.8).  Spread: {effs[0]:.3f} - {effs[-1]:.3f}.
-
-Protocol (VERDICT r05 #2): each pair launches only after two consecutive
-random-gather calibration probes land in [0.48, 1.05]; both legs run
-back-to-back in the same window ({reps} reps each, best-of); leg order
-alternates across pairs so slow co-tenant drift cannot systematically
-throttle one leg.
-
-| pair | leg order | gate probes | randmem ceiling | local[{n1}] wall | local[{n2}] wall | rate N | rate 4N | efficiency |
-|---|---|---|---|---|---|---|---|---|
-{rows}
-
-Per-pair reports: `scaling_{n1}v{n2}_{files}_p*.md`; legs:
-`leg_local*_c{copies}_p*.json`.
-{f'''
-{gate_failed} of {pairs} attempted pairs never launched: their calibration
-gate saw no two consecutive in-band probes in 20 attempts (machine
-contended) and skipped the window rather than measure a neighbor.''' if gate_failed else ''}
-""")
-    print(json.dumps({"median_efficiency": round(med, 3),
-                      "efficiencies": effs, "pairs": len(out),
-                      "gate_failed_pairs": gate_failed,
-                      "levels": levels, "pinned": pin, "files": files}))
-
-
 if __name__ == "__main__":
     if len(sys.argv) > 1 and sys.argv[1] == "--kg-only":
         reps = int(sys.argv[4]) if len(sys.argv) > 4 else 1
         print(json.dumps(run_kg_only(int(sys.argv[2]), int(sys.argv[3]), reps)))
-    elif len(sys.argv) > 1 and sys.argv[1] == "--scaling":
-        copies = int(sys.argv[2]) if len(sys.argv) > 2 else COPIES
-        levels = ((int(sys.argv[3]), int(sys.argv[4]))
-                  if len(sys.argv) > 4 else (2, 8))
-        run_scaling(copies, levels)
-    elif len(sys.argv) > 1 and sys.argv[1] == "--scaling-multi":
-        copies = int(sys.argv[2]) if len(sys.argv) > 2 else COPIES
-        levels = ((int(sys.argv[3]), int(sys.argv[4]))
-                  if len(sys.argv) > 4 else (2, 8))
-        pairs = int(sys.argv[5]) if len(sys.argv) > 5 else 3
-        reps = int(sys.argv[6]) if len(sys.argv) > 6 else 2
-        run_scaling_multi(copies, levels, pairs, reps)
     else:
         print(json.dumps(run_default()))

@@ -18,8 +18,7 @@ Two interchangeable materialization backends:
                              so the A/B doubles as a rehearsal of the
                              production plan.
 
-`bench.py --scaling` runs whichever mode the env selects; BENCH/ records
-the A/B outcome.
+BENCH/ records the A/B outcome.
 """
 
 from __future__ import annotations

@@ -9,8 +9,8 @@ ast/src/utils.rs:82-136):
     key truncated to <= 5000 chars (name portion to <= 2000 first)
 
 Provided both as a pure-Python function (used inside extraction UDFs and
-tests) and as a Spark Column expression (used in the linking plane, JVM-side
-so it stays inside whole-stage codegen — no Python round trip).
+tests) and as a Spark Column expression (used in the linking plane: Spark
+evaluates it JVM-side with the rest of the plan — no Python round trip).
 """
 
 from __future__ import annotations
@@ -49,7 +49,7 @@ def _assemble(node_type: str, sname: str, file: str, start: int | str, verb: str
 
 
 # ---------------------------------------------------------------------------
-# Spark-side (JVM, codegen-friendly) variant.
+# Spark-side (JVM) variant.
 # ---------------------------------------------------------------------------
 
 _NON_ALNUM = r"[^\p{L}\p{N}]"

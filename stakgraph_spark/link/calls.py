@@ -150,7 +150,7 @@ def resolve_calls(mentions: DataFrame, functions: DataFrame,
                .withColumn("skipflag", F.lit(None).cast("string"))
     # lean=True skips strategies 0/5/6 plan-side: the base rows carry null
     # operand + rcv_*, so those equi-joins can never match — semantics are
-    # identical, but ~6 joins of plan (and their codegen stages) are saved.
+    # identical, but ~6 joins of plan (and their stages) are saved.
     # Lazy checkpoint: both consumers below (member hits -> Calls family,
     # member misses -> USES family) share one evaluation of this cascade.
     base_res = _ckpt(_cascade_1_to_6(base, fns, instances, variables,

@@ -11,8 +11,8 @@ definitions once into a row per (repo, lang, name) carrying, per node type,
 the global first-by-key candidate, the definition count, and a
 file -> first-start map for the same-file preference.  Round 1 built ~12
 per-family groupBy lookup tables; at fixture scale their Catalyst planning
-and codegen dominated the link plane's wall time (fixed cost, thread-
-independent), and at 100 TB they are 12 shuffles where 3 suffice.
+and per-job overhead dominated the link plane's wall time (fixed cost,
+thread-independent), and at 100 TB they are 12 shuffles where 3 suffice.
 """
 
 from __future__ import annotations

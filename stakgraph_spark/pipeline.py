@@ -20,6 +20,7 @@ from __future__ import annotations
 import os
 import time
 from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -53,7 +54,37 @@ EDGE_COLS_H = ["src_h", "dst_h", "edge_type", "operand", "confidence",
 
 from .ckpt import ckpt as _ckpt
 
+_CODEGEN_MODE = "spark.sql.codegen.factoryMode"
 
+
+@contextmanager
+def interpreted(spark: SparkSession):
+    """Run the enclosed Spark jobs on Spark's interpreted evaluators.
+
+    A build is ~150 small jobs, most over a few hundred rows: the code
+    generated for them (Janino classes, then the JIT compiling those
+    classes) costs more CPU than it saves, and the next build reuses little
+    of it.  NO_CODEGEN makes projections, predicates and orderings
+    interpreted, and Spark's CollapseCodegenStages skips whole-stage codegen
+    under it as well, so the build does not depend on the session's
+    `spark.sql.codegen.*` settings.  The one class still generated is the
+    row joiner of a partial hash aggregation (no interpreted form exists):
+    one small class per key/buffer shape.
+
+    The conf is internal to Spark (upstream runs its expression tests in
+    both modes); tests/test_build_config.py fails if a Spark version starts
+    compiling code inside a build again.  It is session-wide while set: a
+    query another thread runs on the same session meanwhile runs interpreted
+    too.  The caller's value (or its absence) is restored on exit."""
+    prev = spark.conf.getAll.get(_CODEGEN_MODE)
+    spark.conf.set(_CODEGEN_MODE, "NO_CODEGEN")
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(_CODEGEN_MODE)
+        else:
+            spark.conf.set(_CODEGEN_MODE, prev)
 
 
 @dataclass
@@ -99,10 +130,9 @@ def _norm_edges_h(df: DataFrame) -> DataFrame:
     """Edge family -> internal hashed-endpoint schema (EDGE_COLS_H).
 
     Every family computes src_key/dst_key as unevaluated projections
-    (node_key_col expressions), so wrapping them in xxhash64 here collapses
-    into the same whole-stage codegen pass — the key STRING exists only as
-    a transient register inside the stage that produces the edge row and
-    never enters a shuffle file."""
+    (node_key_col expressions), so the optimizer folds the xxhash64 here
+    into the projection that produces the edge row — the key STRING exists
+    only transiently inside that stage and never enters a shuffle file."""
     df = _norm_edges(df)
     return df.select(
         F.xxhash64("src_key").alias("src_h"),
@@ -234,13 +264,18 @@ def build_graph(spark: SparkSession, source: DataFrame,
     """source (repo,path,commit,lang,content) -> GraphResult.
 
     `raw` may be a pre-materialized extraction stream (the resumable runner
-    persists it per (repo, lang) partition and re-feeds it on restart)."""
+    persists it per (repo, lang) partition and re-feeds it on restart).
+
+    Every job launched here runs `interpreted`; the returned node table's
+    last join (body restore) runs when the caller reads it, under the
+    caller's settings."""
     subunion_k = _subunion_k()
     # CONCURRENT DRIVER THREADS (guide §2.6): independent jobs and their
     # Catalyst analysis overlap across driver threads throughout the build.
     pool = ThreadPoolExecutor(max_workers=12)
     try:
-        return _build(spark, source, raw, pool, subunion_k)
+        with interpreted(spark):
+            return _build(spark, source, raw, pool, subunion_k)
     finally:
         pool.shutdown(wait=False, cancel_futures=True)
 
@@ -658,14 +693,14 @@ def _build(spark: SparkSession, source: DataFrame, raw: DataFrame | None,
     # Sub-union checkpoints (default): the families are materialized as a
     # few concurrently-submitted checkpoint jobs of ~5 families each, and
     # the dedup below unions the CHECKPOINTED RDDs in the same order.  A
-    # single 19-family union job carried every family's physical subtree +
-    # codegen in one stage binary, and each of its ~165 tasks re-paid the
-    # deserialization: 113.8 of that stage's 182.8 core-seconds were
-    # Executor Deserialize Time (event logs, 12 copies; 87% of the whole
-    # app's deserialize time in one stage).  Grouping cuts the per-task
-    # binary to ~a quarter and the final dedup map stage reads shallow
-    # LogicalRDD scans: total app deserialize 94.0 -> 44.6 core-s, warm
-    # kg wall 47.6/56.3 -> 43.8/39.8 s (interleaved A/B).
+    # single 19-family union job carried every family's physical subtree
+    # in one task binary, and each of its ~165 tasks re-paid deserializing
+    # it: 113.8 of that stage's 182.8 core-seconds were Executor
+    # Deserialize Time (event logs, 12 copies, measured with generated
+    # code; the binary is the serialized plan either way).  Grouping cuts
+    # the per-task binary to ~a quarter and the final dedup map stage
+    # reads shallow LogicalRDD scans: total app deserialize 94.0 -> 44.6
+    # core-s, warm kg wall 47.6/56.3 -> 43.8/39.8 s (interleaved A/B).
     #
     # Output-identity argument (the dedup's dropDuplicates survivor is
     # partition-layout-sensitive — 240 duplicate (src_h, dst_h, edge_type)

@@ -145,8 +145,9 @@ def prune_graph(nodes: DataFrame, edges: DataFrame,
     """`edges` must arrive deduplicated + materialized with HASHED endpoints
     (the pipeline's union checkpoint applies the BTreeSet semantics of
     btreemap_graph.rs:51-55); this runs in THREE materialization jobs
-    (keys, nodes, edges) — round 1 ran six, and the per-job planning/codegen
-    fixed cost dominated the link plane's wall clock at bench scale.
+    (keys, nodes, edges) — round 1 ran six, and the per-job planning and
+    scheduling fixed cost dominated the link plane's wall clock at bench
+    scale.
 
     All removal logic runs over a SLIM projection (no bodies) joined on the
     8-byte key_h surrogate.  The orphan prune and each CLEAN_DIRECTIVES

@@ -135,7 +135,7 @@ class PipelineRunner:
     def run(self, source: DataFrame) -> dict:
         from .ckpt import ckpt
         from .extract import extract_raw
-        from .pipeline import build_graph
+        from .pipeline import build_graph, interpreted
         from .source import with_skip_flags
 
         t_all = time.time()
@@ -213,11 +213,14 @@ class PipelineRunner:
                 or not os.path.exists(os.path.join(nodes_path, "_SUCCESS")):
             # keep only raw rows for partitions present in this source
             raw = raw.join(parts, ["repo", "lang"], "leftsemi")
-            g = build_graph(self.spark, source, raw=ckpt(raw))
-            (g.nodes.write.mode("overwrite").partitionBy("repo", "lang")
-             .parquet(nodes_path))
-            (g.edges.write.mode("overwrite").partitionBy("repo", "lang")
-             .parquet(edges_path))
+            # the raw checkpoint and the graph writes are jobs of the same
+            # build: interpreted like the ones inside build_graph
+            with interpreted(self.spark):
+                g = build_graph(self.spark, source, raw=ckpt(raw))
+                (g.nodes.write.mode("overwrite").partitionBy("repo", "lang")
+                 .parquet(nodes_path))
+                (g.edges.write.mode("overwrite").partitionBy("repo", "lang")
+                 .parquet(edges_path))
             self._mark_df("link", self.spark.createDataFrame(
                 [("*", "*")], ["repo", "lang"]))
             if n_removed:
