@@ -99,7 +99,7 @@ def _pick_not_self(cnt: Column, c1: Column, c2: Column, self_in: Column) -> Colu
 
 
 def resolve_calls(mentions: DataFrame, functions: DataFrame,
-                  instances: DataFrame, variables: DataFrame,
+                  instances: DataFrame | None, variables: DataFrame | None,
                   imports_map: DataFrame,
                   struct_fields: DataFrame | None = None,
                   trait_impls: DataFrame | None = None) -> DataFrame:
@@ -110,6 +110,11 @@ def resolve_calls(mentions: DataFrame, functions: DataFrame,
     rcv_* columns are the hybrid-registry receiver facts (strategy 0,
     type_resolved, confidence 1.0 — fires BEFORE the skip list, so mentions
     with skipflag=1 may ONLY resolve via the registry; format.rs:1080-1098).
+
+    A None instances / variables / struct_fields / trait_impls skips
+    strategy 5 / strategy 6 / the struct-field registry / interface
+    dispatch: the caller passes None when the input has none of those rows,
+    and each then yields its null candidate, as its empty join would.
 
     Returns (resolved, unresolved): the unresolved remainder feeds the USES
     edge family (library-call linking, btreemap_graph.rs:421-431)."""
@@ -148,13 +153,13 @@ def resolve_calls(mentions: DataFrame, functions: DataFrame,
                .withColumn("rcv_base", F.lit(None).cast("string")) \
                .withColumn("rcv_field", F.lit(None).cast("string")) \
                .withColumn("skipflag", F.lit(None).cast("string"))
-    # lean=True skips strategies 0/5/6 plan-side: the base rows carry null
+    # strategies 0/5/6 are skipped plan-side: the base rows carry null
     # operand + rcv_*, so those equi-joins can never match — semantics are
     # identical, but ~6 joins of plan (and their stages) are saved.
     # Lazy checkpoint: both consumers below (member hits -> Calls family,
     # member misses -> USES family) share one evaluation of this cascade.
-    base_res = _ckpt(_cascade_1_to_6(base, fns, instances, variables,
-                                     imports_map, None, lean=True),
+    base_res = _ckpt(_cascade_1_to_6(base, fns, None, None, imports_map,
+                                     registry=False),
                      eager=False)
     member = (base_res.where(F.col("dst_file").isNotNull())
               .withColumn("dst_name", F.col("called"))   # the base object's name
@@ -172,15 +177,16 @@ def resolve_calls(mentions: DataFrame, functions: DataFrame,
             unres_no_op.unionByName(member_miss))
 
 
-def _cascade_1_to_6(mentions: DataFrame, fns: DataFrame, instances: DataFrame,
-                    variables: DataFrame, imports_map: DataFrame,
+def _cascade_1_to_6(mentions: DataFrame, fns: DataFrame,
+                    instances: DataFrame | None,
+                    variables: DataFrame | None, imports_map: DataFrame,
                     struct_fields: DataFrame | None = None,
-                    lean: bool = False,
+                    registry: bool = True,
                     trait_impls: DataFrame | None = None) -> DataFrame:
     m = mentions
     _null_cand = F.lit(None).cast("struct<file:string,start:bigint>")
 
-    if lean:
+    if not registry:
         m = m.withColumn("r_registry", _null_cand)
     else:
         # -- 0. type registry (rust/ts hybrid resolver): receiver type known
@@ -334,8 +340,8 @@ def _cascade_1_to_6(mentions: DataFrame, fns: DataFrame, instances: DataFrame,
                       _pick_not_self(F.col("cnt"), F.col("c1"), F.col("c2"), self_in_dir))
           .drop("cnt", "c1", "c2", "dir"))
 
-    if lean:
-        m = m.withColumn("r_operand", _null_cand).withColumn("r_nested", _null_cand)
+    if instances is None:
+        m = m.withColumn("r_operand", _null_cand)
     else:
         # -- 5. operand: Instance -> class -> method (call_finder.rs:288-310)
         inst = (instances.where(F.col("data_type").isNotNull())
@@ -356,6 +362,9 @@ def _cascade_1_to_6(mentions: DataFrame, fns: DataFrame, instances: DataFrame,
                     KEY + ["called", "data_type"], "left")
               .drop("data_type"))
 
+    if variables is None:
+        m = m.withColumn("r_nested", _null_cand)
+    else:
         # -- 6. nested_var: Var operand -> Function meta.nested_in == operand
         var_names = (variables.select(*KEY, F.col("name").alias("operand")).distinct()
                      .withColumn("var_exists", F.lit(True)))

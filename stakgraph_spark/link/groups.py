@@ -94,10 +94,9 @@ def endpoint_prefixes(mention: DataFrame, eps: DataFrame,
 
 def apply_endpoint_groups(ex_nodes: DataFrame, mention: DataFrame,
                           imports_map: DataFrame) -> tuple[DataFrame, DataFrame]:
-    # gate on the prefix facts (endpoint_prefixes reads no other mention
-    # kind): a scan of the extraction checkpoint, not of the rename plan
-    if mention.where(F.col("m_kind").isin(PREFIX_KINDS)).isEmpty():
-        return ex_nodes, mention
+    """Rename grouped endpoints and their handler mentions.  Every rename
+    is rooted in a PREFIX_KINDS mention, so the pipeline calls this only
+    when its census holds one."""
     eps = ex_nodes.where(F.col("node_type") == "Endpoint")
     renames = _ckpt(endpoint_prefixes(mention, eps, imports_map))
 

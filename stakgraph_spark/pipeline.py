@@ -22,8 +22,9 @@ import time
 from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager
 from dataclasses import dataclass, field
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .extract import extract_raw
@@ -32,6 +33,7 @@ from .langspec import LANGS
 from .link import api as api_link
 from .link import simple as simple_link
 from .link.calls import resolve_calls
+from .link.groups import PREFIX_KINDS, apply_endpoint_groups
 from .source import with_skip_flags
 
 EDGE_COLS = ["src_key", "dst_key", "edge_type", "operand", "confidence",
@@ -67,9 +69,11 @@ def interpreted(spark: SparkSession):
     of it.  NO_CODEGEN makes projections, predicates and orderings
     interpreted, and Spark's CollapseCodegenStages skips whole-stage codegen
     under it as well, so the build does not depend on the session's
-    `spark.sql.codegen.*` settings.  The one class still generated is the
-    row joiner of a partial hash aggregation (no interpreted form exists):
-    one small class per key/buffer shape.
+    `spark.sql.codegen.*` settings.  Two kinds of class are still
+    generated, one small class per shape: the row joiner of a partial hash
+    aggregation (no interpreted form exists), and the projection that
+    serializes an Observation's collect_set buffer (the census), which
+    runs after its task ends, outside the session's settings.
 
     The conf is internal to Spark (upstream runs its expression tests in
     both modes); tests/test_build_config.py fails if a Spark version starts
@@ -246,6 +250,109 @@ def file_plane(src: DataFrame) -> tuple[DataFrame, DataFrame]:
     return nodes, _norm_edges(edges)
 
 
+# ---------------- census gates ----------------
+# The reference builds one Repo per detected language and runs only the
+# stages and clean_graph directives that language has (builder/core.rs,
+# stages.rs:628-640).  The build here plans every consumer for every input,
+# and Spark's adaptive execution drops an empty branch only after that
+# branch's query stage has run, so each consumer of an absent kind still
+# costs its analysis and its jobs.  One census per build — the set of
+# (rec, lang, kind) the extraction produced — decides which consumers are
+# constructed at all.
+#
+# Exactness rule: a gate may skip a consumer only when the absent kind
+# roots every output row — an inner join or filter on that kind, a
+# left-anti join whose drop set is then empty, or a left join that only
+# adds columns to existing rows.  A gate is a tuple of alternatives; the
+# consumer is built when every term of one alternative is in the census.
+# A term is (rec, kind, langs): kind None matches any kind, langs () any
+# language.
+
+
+# languages whose Instance nodes are candidates, kept only when their
+# data_type names a Class (add_instances)
+INSTANCE_FILTER_LANGS = ("java", "c")
+
+
+def _n(kind: str, *langs: str) -> tuple:
+    return ("node", kind, langs)
+
+
+def _m(kind: str, *langs: str) -> tuple:
+    return ("mention", kind, langs)
+
+
+GATES: dict[str, tuple[tuple[tuple, ...], ...]] = {
+    # edge families: each joins or filters its inputs on the named kinds
+    "implements": ((_m("implements"),),),             # mention rows inner-joined
+    "python_handlers": ((_m("handler", "python"),),),  # python mentions filtered
+    "verb_handlers": ((_m("handler"),),),             # inner join on mentions
+    "ruby_endpoints": ((_n("Endpoint", "ruby"),),),   # ruby endpoints filtered
+    "function_vars": ((_n("Var"), _m("ident_set")),),  # inner joins on both
+    "import_edges": ((_m("import_edge"),),),          # mention rows inner-joined
+    "ruby_dm_within": ((_n("DataModel", "ruby"),),),  # inner join on ruby DMs
+    "php_handlers": ((_m("php_handler"),),),          # mention rows inner-joined
+    "angular_renders": ((_m("ng_render"),),),         # inner join on mentions
+    "requests_endpoints": ((_n("Request"), _n("Endpoint")),),      # inner join
+    "integration_tests": ((_n("IntegrationTest"), _n("Endpoint")),),  # inner
+    "e2e_pages": ((_n("E2eTest"), _n("Page")),),      # inner join
+    "e2e_test_ids": ((_n("E2eTest"),),),              # inner join on tests
+    "uses": ((_n("Library"), _m("import")),),         # inner joins on both
+    # fused symtab parts: each part's rows are its mentions or nodes, kept
+    # only where the symtab holds the target type
+    "fused.operand": ((_m("operand_cls"), _n("Class")),
+                      (_m("operand_cls"), _n("DataModel"))),
+    "fused.class_new": ((_m("call"), _n("Class")),),  # unique-Class pick
+    "fused.renders": ((_m("renders"),),),             # mention rows
+    "fused.test_class": ((_m("test_class"), _n("Class")),),  # Class pick
+    "fused.dm": ((_n("DataModel"), _m("dm_set")),),   # inner join + DM pick
+    "fused.parent": ((_n("Class"),),),                # Class rows, Class pick
+    "fused.includes": ((_n("Class"),),),              # Class rows, Class pick
+    "fused.instance": ((_n("Instance"), _n("Class")),),  # Class pick
+    # node plane
+    # left-anti join: its drop set holds only these instances
+    "instance_filter": ((_n("Instance", *INSTANCE_FILTER_LANGS),),),
+    "indirect_tests": ((_n("IntegrationTest"), _n("Request"),
+                        _n("Endpoint")),),            # inner joins on all three
+    "fat_bodies": ((("fat", None, ()),),),            # left join adds a column
+    "endpoint_groups": tuple((_m(k),) for k in PREFIX_KINDS),  # renames
+    # call cascade: a skipped strategy yields its null candidate
+    "cascade.operand": ((_n("Instance"),),),          # left join on instances
+    "cascade.nested_var": ((_n("Var"),),),            # left join on vars
+    "cascade.struct_fields": ((_m("struct_field"),),),  # left join on fields
+    # implementors register under the interface name; csharp interface
+    # methods (meta.trait_operand) are the no-implementation fallback
+    "cascade.interface": ((_m("implements", "java", "csharp"),),
+                          (_n("Function", "csharp"),)),
+}
+
+
+@dataclass(frozen=True)
+class Census:
+    """The (rec, lang, kind) triples an extraction produced; kind is
+    coalesce(node_type, m_kind, edge_type)."""
+    present: frozenset
+
+    @staticmethod
+    def column():
+        return F.collect_set(F.struct(
+            "rec", "lang",
+            F.coalesce("node_type", "m_kind", "edge_type").alias("kind")))
+
+    @classmethod
+    def of(cls, rows) -> "Census":
+        return cls(frozenset((r["rec"], r["lang"], r["kind"]) for r in rows))
+
+    def has(self, rec: str, kind: str | None = None,
+            langs: tuple = ()) -> bool:
+        return any(r == rec and kind in (None, k) and (not langs or lg in langs)
+                   for r, lg, k in self.present)
+
+    def admits(self, gate: str) -> bool:
+        return any(all(self.has(*term) for term in alt)
+                   for alt in GATES[gate])
+
+
 def _subunion_k() -> int:
     """Edge families per sub-union checkpoint (STAKGRAPH_SUBUNION_K)."""
     val = os.environ.get("STAKGRAPH_SUBUNION_K", "5")
@@ -319,10 +426,14 @@ def _build(spark: SparkSession, source: DataFrame, raw: DataFrame | None,
     # from the file plane, so the file/package plane's ~2.5 s of cold
     # Catalyst analysis (measured at 0.09 core-util) overlaps the
     # extraction's execution instead of preceding it on an idle cluster.
+    # The census rides the extraction checkpoint as an Observation (no job
+    # of its own); a raw stream passed in is censused with one aggregate.
     fut_raw = None
     if raw is None:
+        obs = Observation()
         fut_raw = pool.submit(
-            lambda: _ckpt(extract_raw(src.where(F.col("skipped").isNull()))))
+            lambda: _ckpt(extract_raw(src.where(F.col("skipped").isNull()))
+                          .observe(obs, Census.column().alias("kinds"))))
 
     fp_nodes, fp_edges = file_plane(src)
     # workspace/package detection (monorepos): Package nodes + edges
@@ -335,7 +446,19 @@ def _build(spark: SparkSession, source: DataFrame, raw: DataFrame | None,
 
     if fut_raw is not None:
         raw = fut_raw.result()
+        census = Census.of(obs.get["kinds"])
+    else:
+        census = Census.of(raw.agg(Census.column()).collect()[0][0])
     stage("raw_extracted")
+    skipped: list[str] = []
+    metrics.append({"stage": "census", "t": round(time.time() - t0, 3),
+                    "kinds": sorted(census.present), "skipped": skipped})
+
+    def gate(name: str) -> bool:
+        if census.admits(name):
+            return True
+        skipped.append(name)
+        return False
 
     ex_nodes = raw.where(F.col("rec") == "node").select(
         "node_type", "name", "file", "start", "end", "body", "docs", "hash",
@@ -366,9 +489,11 @@ def _build(spark: SparkSession, source: DataFrame, raw: DataFrame | None,
                     .alias("_v"))
            .agg(F.min_by(F.struct(*ep_cols), "start").alias("k"))
            .select("k.*"))
-    ruby_eps, ruby_handler_edges = simple_link.ruby_admit_endpoints(
-        eps_all.where(F.col("lang") == "ruby"), mention, ex_nodes)
-    eps = eps.unionByName(ruby_eps)
+    ruby_handler_edges = None
+    if gate("ruby_endpoints"):
+        ruby_eps, ruby_handler_edges = simple_link.ruby_admit_endpoints(
+            eps_all.where(F.col("lang") == "ruby"), mention, ex_nodes)
+        eps = eps.unionByName(ruby_eps)
     ex_nodes = ex_nodes.where(F.col("node_type") != "Endpoint").unionByName(eps)
     imports_map = mention.where(F.col("m_kind") == "import").select(
         "repo", "lang", F.col("src_file").alias("file"),
@@ -376,8 +501,9 @@ def _build(spark: SparkSession, source: DataFrame, raw: DataFrame | None,
 
     # endpoint-group prefix rewrite (rust scope/nest/mount/configure) BEFORE
     # keys are computed — renames endpoints and their handler mentions
-    from .link.groups import apply_endpoint_groups
-    ex_nodes, mention = apply_endpoint_groups(ex_nodes, mention, imports_map)
+    if gate("endpoint_groups"):
+        ex_nodes, mention = apply_endpoint_groups(ex_nodes, mention,
+                                                  imports_map)
 
     # file-plane nodes carry no body_mode/off (their bodies are empty by
     # construction); allowMissingColumns fills the slimming columns with null
@@ -439,14 +565,19 @@ def _build(spark: SparkSession, source: DataFrame, raw: DataFrame | None,
         F.element_at("m_extra", "rcv_field").alias("rcv_field"),
         F.element_at("m_extra", "rcv_call").alias("rcv_call"),
         F.element_at("m_extra", "skip").alias("skipflag"))
-    struct_fields = mention.where(F.col("m_kind") == "struct_field").select(
-        "repo", "lang", F.col("src_name").alias("type"),
-        F.col("dst_name").alias("field"),
-        F.element_at("m_extra", "ftype").alias("ftype"))
+    struct_fields = None
+    if gate("cascade.struct_fields"):
+        struct_fields = mention.where(
+            F.col("m_kind") == "struct_field").select(
+            "repo", "lang", F.col("src_name").alias("type"),
+            F.col("dst_name").alias("field"),
+            F.element_at("m_extra", "ftype").alias("ftype"))
 
     functions = nodes.where(F.col("node_type") == "Function")
-    instances = nodes.where(F.col("node_type") == "Instance")
-    variables = nodes.where(F.col("node_type") == "Var")
+    instances = (nodes.where(F.col("node_type") == "Instance")
+                 if gate("cascade.operand") else None)
+    variables = (nodes.where(F.col("node_type") == "Var")
+                 if gate("cascade.nested_var") else None)
 
     # handler linking for languages WITHOUT a custom handler_finder (go & co)
     # goes through the same cascade as calls (format.rs:552-577 routes the
@@ -461,8 +592,10 @@ def _build(spark: SparkSession, source: DataFrame, raw: DataFrame | None,
         "repo", "lang", "src_type", "src_name", "src_file", "src_start",
         "src_verb", "dst_name",
         F.element_at("m_extra", "verb_style").alias("verb_style"))
-    verb_handler_edges = simple_link.resolve_verb_handlers(
-        handler_m.where(F.col("verb_style") == "1"), nodes)
+    verb_handler_edges = None
+    if gate("verb_handlers"):
+        verb_handler_edges = simple_link.resolve_verb_handlers(
+            handler_m.where(F.col("verb_style") == "1"), nodes)
     handler_m = handler_m.where(F.col("verb_style").isNull()).drop("verb_style")
     hm_cascade = (handler_m.where(~F.col("lang").isin(USE_HANDLER_FINDER))
                   .withColumn("called", F.col("dst_name"))
@@ -478,10 +611,12 @@ def _build(spark: SparkSession, source: DataFrame, raw: DataFrame | None,
     # java + csharp: receiver typed as an interface resolves to an
     # implementing class's method (java_resolver.rs:239-259,
     # cs_resolver.rs:215-262)
-    trait_impls = (mention.where((F.col("m_kind") == "implements")
-                                 & F.col("lang").isin("java", "csharp"))
-                   .selectExpr("repo", "lang", "src_name as cls",
-                               "dst_name as trait").distinct())
+    trait_impls = None
+    if gate("cascade.interface"):
+        trait_impls = (mention.where((F.col("m_kind") == "implements")
+                                     & F.col("lang").isin("java", "csharp"))
+                       .selectExpr("repo", "lang", "src_name as cls",
+                                   "dst_name as trait").distinct())
 
     # The call cascade (which materializes its own checkpoint + runs the
     # member-expr gate) and the shared symbol table are independent jobs —
@@ -516,26 +651,33 @@ def _build(spark: SparkSession, source: DataFrame, raw: DataFrame | None,
     # The anti-join is applied ONLY where dropped instances matter
     # (instance_of input + the final node set) — reassigning `nodes` here
     # used to replay the anti-join inside every downstream family's plan.
-    INSTANCE_FILTER_LANGS = ["java", "c"]
-    class_names = (symtab.where(F.col("t_Class").isNotNull())
-                   .select("repo", "lang", F.col("name").alias("data_type")))
-    inst_drop = (nodes.where((F.col("node_type") == "Instance")
-                             & F.col("lang").isin(INSTANCE_FILTER_LANGS))
-                 .join(class_names, ["repo", "lang", "data_type"], "left_anti")
-                 .select("key_h"))
-    nodes_no_badinst = nodes.join(inst_drop, "key_h", "left_anti")
+    nodes_no_badinst = nodes
+    if gate("instance_filter"):
+        class_names = (symtab.where(F.col("t_Class").isNotNull())
+                       .select("repo", "lang",
+                               F.col("name").alias("data_type")))
+        inst_drop = (nodes.where((F.col("node_type") == "Instance")
+                                 & F.col("lang").isin(*INSTANCE_FILTER_LANGS))
+                     .join(class_names, ["repo", "lang", "data_type"],
+                           "left_anti")
+                     .select("key_h"))
+        nodes_no_badinst = nodes.join(inst_drop, "key_h", "left_anti")
 
-    impl_m = mention.where(F.col("m_kind") == "implements").select(
-        "repo", "lang", "src_name", "src_file", "src_start", "dst_name")
-    impl_edges = simple_link.resolve_implements(impl_m, symtab)
+    impl_edges = None
+    if gate("implements"):
+        impl_m = mention.where(F.col("m_kind") == "implements").select(
+            "repo", "lang", "src_name", "src_file", "src_start", "dst_name")
+        impl_edges = simple_link.resolve_implements(impl_m, symtab)
 
     # custom-handler_finder languages (python: same file / django module
     # paths, endpoint KEPT on miss); cascade languages get their Handler
     # edges from `hres` once the cascade resolves below, and endpoints whose
     # handler failed the cascade are DROPPED (format.rs:516-523 + default
     # handler_finder)
-    py_handler_edges = simple_link.resolve_handlers(
-        handler_m.where(F.col("lang") == "python"), nodes)
+    py_handler_edges = None
+    if gate("python_handlers"):
+        py_handler_edges = simple_link.resolve_handlers(
+            handler_m.where(F.col("lang") == "python"), nodes)
 
     # set-valued mentions: intersect the per-function identifier array with
     # the per-(repo,lang) symbol-name set FIRST, explode after — a
@@ -561,15 +703,21 @@ def _build(spark: SparkSession, source: DataFrame, raw: DataFrame | None,
                         F.explode(F.array_intersect("names", "sym_names"))
                         .alias("dst_name")))
 
-    import_bodies = (nodes.where(F.col("node_type") == "Import")
-                     .select("repo", "lang", F.col("file").alias("src_file"),
-                             F.col("body").alias("import_body")))
-    var_edges = simple_link.function_contains_vars(
-        explode_set("ident_set", "Var"), nodes, import_bodies)
+    var_edges = None
+    if gate("function_vars"):
+        import_bodies = (nodes.where(F.col("node_type") == "Import")
+                         .select("repo", "lang",
+                                 F.col("file").alias("src_file"),
+                                 F.col("body").alias("import_body")))
+        var_edges = simple_link.function_contains_vars(
+            explode_set("ident_set", "Var"), nodes, import_bodies)
 
-    import_edge_m = mention.where(F.col("m_kind") == "import_edge").select(
-        "repo", "lang", "src_name", "src_file", "src_start", "dst_name", "dst_file")
-    imp_edges = simple_link.import_edges(import_edge_m, nodes)
+    imp_edges = None
+    if gate("import_edges"):
+        import_edge_m = mention.where(F.col("m_kind") == "import_edge").select(
+            "repo", "lang", "src_name", "src_file", "src_start", "dst_name",
+            "dst_file")
+        imp_edges = simple_link.import_edges(import_edge_m, nodes)
 
     # EIGHT same-file-then-global families ride ONE symtab join (the fused
     # plan replaces eight per-family join/planning passes — their fixed cost
@@ -580,15 +728,6 @@ def _build(spark: SparkSession, source: DataFrame, raw: DataFrame | None,
     def tag(df, kind):
         return df.withColumn("kind", F.lit(kind)).select(*M_COLS)
 
-    operand_m = tag(mention.where(F.col("m_kind") == "operand_cls")
-                    .withColumn("src_type", F.lit("Function")), "operand")
-    class_new_m = tag(
-        mention.where((F.col("m_kind") == "call")
-                      & (F.element_at("m_extra", "class_new") == "1")),
-        "class_new")
-    renders_m = tag(mention.where(F.col("m_kind") == "renders"), "renders")
-    tc_m = tag(mention.where(F.col("m_kind") == "test_class"), "test_class")
-    dm_m = tag(explode_set("dm_set", "DataModel"), "dm")
     cls_nodes = nodes.where(F.col("node_type") == "Class")
 
     def node_m(df, src_type, dst_col, kind):
@@ -598,32 +737,57 @@ def _build(spark: SparkSession, source: DataFrame, raw: DataFrame | None,
             F.col("start").alias("src_start"), dst_col.alias("dst_name")),
             kind)
 
-    parent_m = node_m(
-        cls_nodes.where(F.element_at("meta", "parent").isNotNull()),
-        "Class", F.element_at("meta", "parent"), "parent")
-    includes_m = node_m(
-        cls_nodes.where(F.element_at("meta", "includes").isNotNull())
-        .withColumn("inc", F.explode(
-            F.split(F.element_at("meta", "includes"), ","))),
-        "Class", F.trim("inc"), "includes")
-    instance_m = node_m(
-        nodes.where((F.col("node_type") == "Instance")
-                    & F.col("data_type").isNotNull()),
-        "Instance", F.col("data_type"), "instance")
-    fused_in = operand_m
-    for t in (class_new_m, renders_m, tc_m, dm_m, parent_m, includes_m,
-              instance_m):
-        fused_in = fused_in.unionByName(t)
-    fused_edges = simple_link.fused_symtab_edges(fused_in, symtab)
-    ruby_dm_edges = simple_link.ruby_dm_within(nodes)
+    # fused parts in union order; only the parts the census admits are
+    # constructed, and with none there is no fused family
+    fused_parts = {
+        "operand": lambda: tag(
+            mention.where(F.col("m_kind") == "operand_cls")
+            .withColumn("src_type", F.lit("Function")), "operand"),
+        "class_new": lambda: tag(
+            mention.where((F.col("m_kind") == "call")
+                          & (F.element_at("m_extra", "class_new") == "1")),
+            "class_new"),
+        "renders": lambda: tag(
+            mention.where(F.col("m_kind") == "renders"), "renders"),
+        "test_class": lambda: tag(
+            mention.where(F.col("m_kind") == "test_class"), "test_class"),
+        "dm": lambda: tag(explode_set("dm_set", "DataModel"), "dm"),
+        "parent": lambda: node_m(
+            cls_nodes.where(F.element_at("meta", "parent").isNotNull()),
+            "Class", F.element_at("meta", "parent"), "parent"),
+        "includes": lambda: node_m(
+            cls_nodes.where(F.element_at("meta", "includes").isNotNull())
+            .withColumn("inc", F.explode(
+                F.split(F.element_at("meta", "includes"), ","))),
+            "Class", F.trim("inc"), "includes"),
+        "instance": lambda: node_m(
+            nodes.where((F.col("node_type") == "Instance")
+                        & F.col("data_type").isNotNull()),
+            "Instance", F.col("data_type"), "instance"),
+    }
+    fused_in = [part() for kind, part in fused_parts.items()
+                if gate(f"fused.{kind}")]
+    fused_edges = None
+    if fused_in:
+        fused_edges = simple_link.fused_symtab_edges(
+            reduce(DataFrame.unionByName, fused_in), symtab)
+    ruby_dm_edges = (simple_link.ruby_dm_within(nodes)
+                     if gate("ruby_dm_within") else None)
 
-    php_handler = simple_link.php_handler_edges(
-        mention.where(F.col("m_kind") == "php_handler"), nodes)
-    ng_renders = simple_link.angular_renders(mention)
-    api_edges = api_link.link_requests_to_endpoints(nodes)
-    itest_edges = api_link.link_integration_tests(nodes)
-    e2e_edges = api_link.link_e2e_tests_pages(nodes)
-    e2e_testid_edges = api_link.link_e2e_test_ids(nodes)
+    php_handler = None
+    if gate("php_handlers"):
+        php_handler = simple_link.php_handler_edges(
+            mention.where(F.col("m_kind") == "php_handler"), nodes)
+    ng_renders = (simple_link.angular_renders(mention)
+                  if gate("angular_renders") else None)
+    api_edges = (api_link.link_requests_to_endpoints(nodes)
+                 if gate("requests_endpoints") else None)
+    itest_edges = (api_link.link_integration_tests(nodes)
+                   if gate("integration_tests") else None)
+    e2e_edges = (api_link.link_e2e_tests_pages(nodes)
+                 if gate("e2e_pages") else None)
+    e2e_testid_edges = (api_link.link_e2e_test_ids(nodes)
+                        if gate("e2e_test_ids") else None)
 
     # ---- cascade results (the pool thread's jobs have been executing under
     # all of the analysis above) ----
@@ -647,8 +811,10 @@ def _build(spark: SparkSession, source: DataFrame, raw: DataFrame | None,
                      F.col("src_start"), F.col("src_verb")).alias("src_key"),
         node_key_col(F.lit("Function"), F.col("dst_name"), F.col("dst_file"),
                      F.col("dst_start")).alias("dst_key"))
-    handler_edges = _norm_edges(py_handler_edges).unionByName(
-        _norm_edges(cascade_handler_edges))
+    handler_edges = _norm_edges(cascade_handler_edges)
+    if py_handler_edges is not None:
+        handler_edges = _norm_edges(py_handler_edges).unionByName(
+            handler_edges)
     resolved_eps = hres.select(
         F.xxhash64(
             node_key_col(F.col("src_type"), F.col("src_name"), F.col("src_file"),
@@ -661,8 +827,11 @@ def _build(spark: SparkSession, source: DataFrame, raw: DataFrame | None,
     ).distinct()
     dropped_endpoints = all_cascade_eps.join(resolved_eps, "key_h", "left_anti")
 
-    uses_edges = simple_link.resolve_uses(
-        unresolved_calls.where(F.col("mk") == "call"), imports_map, nodes)
+    uses_edges = None
+    if gate("uses"):
+        uses_edges = simple_link.resolve_uses(
+            unresolved_calls.where(F.col("mk") == "call"), imports_map,
+            nodes)
     stage("linking_declared")
 
     # final node-plane filters — these depend only on the cascade/symtab
@@ -685,11 +854,13 @@ def _build(spark: SparkSession, source: DataFrame, raw: DataFrame | None,
     # overlaps their planning and their (mostly sub-second) stages, which
     # were serialized by the single union job in rounds 1-2 — the measured
     # scheduler-latency serial fraction that broke the scaling target
-    fams = [direct_edges, file_contains, call_edges, impl_edges,
-            handler_edges, ruby_handler_edges, verb_handler_edges, var_edges,
-            imp_edges, fused_edges, api_edges, itest_edges,
-            e2e_edges, ruby_dm_edges, e2e_testid_edges,
-            uses_edges, php_handler, ng_renders, fp_edges]
+    # (None: a family the census gated out)
+    fams = [f for f in (
+        direct_edges, file_contains, call_edges, impl_edges, handler_edges,
+        ruby_handler_edges, verb_handler_edges, var_edges, imp_edges,
+        fused_edges, api_edges, itest_edges, e2e_edges, ruby_dm_edges,
+        e2e_testid_edges, uses_edges, php_handler, ng_renders, fp_edges)
+        if f is not None]
     # Sub-union checkpoints (default): the families are materialized as a
     # few concurrently-submitted checkpoint jobs of ~5 families each, and
     # the dedup below unions the CHECKPOINTED RDDs in the same order.  A
@@ -712,33 +883,19 @@ def _build(spark: SparkSession, source: DataFrame, raw: DataFrame | None,
     # in-stage union.  Verified: order-insensitive full-row digest
     # (count + sum + xor of xxhash64 over every column, meta canonicalized)
     # of nodes AND edges is bit-identical to the single-union build at 12
-    # copies, and stable across repeated runs.
-    #
-    # Per-FAMILY checkpoints (19 jobs) measured SLOWER at 36k files
-    # (161 s vs 116 s — job/checkpoint overheads dominate);
-    # STAKGRAPH_CONC_LINK keeps that experiment reachable.
-    if os.environ.get("STAKGRAPH_CONC_LINK"):
-        futs = [pool.submit(lambda d=d: _ckpt(_norm_edges_h(d)))
-                for d in fams]
-        checked = [f.result() for f in futs]
-        edges = checked[0]
-        for e in checked[1:]:
-            edges = edges.unionByName(e)
-    else:
-        groups = [fams[i:i + subunion_k]
-                  for i in range(0, len(fams), subunion_k)]
+    # copies, and stable across repeated runs.  A family the census gates
+    # out would have been empty, but dropping it regroups the families and
+    # can shift later partitions' indices, so a value-distinct duplicate
+    # group's survivor may move (ROADMAP item 3); the node and edge-key
+    # digests do not depend on it.
+    groups = [fams[i:i + subunion_k]
+              for i in range(0, len(fams), subunion_k)]
 
-        def _sub(g):
-            u = _norm_edges_h(g[0])
-            for e in g[1:]:
-                u = u.unionByName(_norm_edges_h(e))
-            return _ckpt(u)
+    def _sub(g):
+        return _ckpt(reduce(DataFrame.unionByName, map(_norm_edges_h, g)))
 
-        futs = [pool.submit(lambda g=g: _sub(g)) for g in groups]
-        checked = [f.result() for f in futs]
-        edges = checked[0]
-        for e in checked[1:]:
-            edges = edges.unionByName(e)
+    futs = [pool.submit(_sub, g) for g in groups]
+    edges = reduce(DataFrame.unionByName, [f.result() for f in futs])
     # BTreeSet edge dedup (btreemap_graph.rs:51-55) over the materialized
     # family RDDs — one shuffle, shallow plan.  Dedup key is the surrogate
     # pair: a false merge needs two distinct edges colliding on BOTH 64-bit
@@ -765,9 +922,11 @@ def _build(spark: SparkSession, source: DataFrame, raw: DataFrame | None,
     # checkpoint cannot perturb the output.
     # arguments bound at submit time: the main thread rebinds `edges` to
     # the pruned table below while this job may still be planning
-    fut_ind = pool.submit(
-        lambda n, e: _ckpt(api_link.indirect_test_endpoints(n, e)),
-        nodes_final, edges)
+    fut_ind = None
+    if gate("indirect_tests"):
+        fut_ind = pool.submit(
+            lambda n, e: _ckpt(api_link.indirect_test_endpoints(n, e)),
+            nodes_final, edges)
 
     # fat-companion body table, same overlap treatment as `ind` (it
     # depends only on the RAW checkpoint): dedup-to-unique key_h is
@@ -777,37 +936,49 @@ def _build(spark: SparkSession, source: DataFrame, raw: DataFrame | None,
     # any partitioning — and materializing it during the prune plane takes
     # its filter/key/dedup subtree out of the final node plan's count-time
     # AQE stepping.
-    fat_lazy = (_key(raw.where(F.col("rec") == "fat")
-                     .select("node_type", "name", "file", "start", "body",
-                             "meta", "repo", "lang"))
-                .select(F.xxhash64("node_key").alias("key_h"),
-                        F.col("body").alias("_fat_body"))
-                .dropDuplicates(["key_h"]))
-    fut_fat = pool.submit(lambda: _ckpt(fat_lazy))
+    fut_fat = None
+    if gate("fat_bodies"):
+        fat_lazy = (_key(raw.where(F.col("rec") == "fat")
+                         .select("node_type", "name", "file", "start", "body",
+                                 "meta", "repo", "lang"))
+                    .select(F.xxhash64("node_key").alias("key_h"),
+                            F.col("body").alias("_fat_body"))
+                    .dropDuplicates(["key_h"]))
+        fut_fat = pool.submit(lambda: _ckpt(fat_lazy))
 
     # ---------------- prune plane ----------------
-    from .prune import prune_graph
+    from . import prune
+    # a directive runs only where its language has the node type it removes
+    directives = {}
+    for lang, entries in prune.CLEAN_DIRECTIVES.items():
+        for d in entries:
+            if census.has("node", d[1], (lang,)):
+                directives.setdefault(lang, []).append(d)
+            else:
+                skipped.append(f"prune.{lang}.{d[0]}")
     # full=nodes: the final payload materialization filters the PLAIN node
     # checkpoint by the pruned key set — `keys` already excludes the
     # instance-filter and endpoint-drop hits (slim was projected from
     # nodes_final), so re-running those anti-join subtrees inside the final
     # job would only duplicate work and deepen its plan
-    nodes, edges = prune_graph(nodes_final, edges, pool=pool,
-                               slim=fut_slim.result(), full=nodes)
-    ind = fut_ind.result()
-
-    nodes = (nodes.join(ind, "key_h", "left")
-             .withColumn(
-                 "meta",
-                 F.when(F.col("indirect_test").isNotNull(),
-                        F.map_concat(
-                            F.coalesce("meta", F.create_map().cast(
-                                "map<string,string>")),
-                            F.create_map(
-                                F.lit("indirect_test"), F.col("indirect_test"),
-                                F.lit("test_helper"), F.col("test_helper"))))
-                 .otherwise(F.col("meta")))
-             .drop("indirect_test", "test_helper"))
+    nodes, edges = prune.prune_graph(nodes_final, edges, pool=pool,
+                                     slim=fut_slim.result(), full=nodes,
+                                     directives=directives)
+    if fut_ind is not None:
+        nodes = (nodes.join(fut_ind.result(), "key_h", "left")
+                 .withColumn(
+                     "meta",
+                     F.when(F.col("indirect_test").isNotNull(),
+                            F.map_concat(
+                                F.coalesce("meta", F.create_map().cast(
+                                    "map<string,string>")),
+                                F.create_map(
+                                    F.lit("indirect_test"),
+                                    F.col("indirect_test"),
+                                    F.lit("test_helper"),
+                                    F.col("test_helper"))))
+                     .otherwise(F.col("meta")))
+                 .drop("indirect_test", "test_helper"))
 
     # ---- body restore — the ONLY pass that touches full bodies ----
     # inline (link-consumed) bodies + docs/hash ride the node table; 'span'
@@ -816,14 +987,15 @@ def _build(spark: SparkSession, source: DataFrame, raw: DataFrame | None,
     # non-span rows from matching); the rare non-span remainder comes from
     # the rec='fat' companion rows, deduped to mirror the node dedup
     # (materialized above, concurrently with the prune plane).
-    fat_tbl = fut_fat.result()
     src_lines = src.select(
         F.col("repo").alias("_sl_repo"), F.col("lang").alias("_sl_lang"),
         F.col("path").alias("_sl_file"),
         F.split(F.coalesce("content", F.lit("")), "\n").alias("_lines"))
     # the pruned node table already carries the payload columns (single
     # node checkpoint); only the fat companions and span text need joins
-    base = nodes.join(fat_tbl, "key_h", "left")
+    base = (nodes.join(fut_fat.result(), "key_h", "left")
+            if fut_fat is not None
+            else nodes.withColumn("_fat_body", F.lit(None).cast("string")))
     joined = base.join(
         src_lines,
         (base["repo"] == F.col("_sl_repo"))

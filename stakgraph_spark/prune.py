@@ -140,7 +140,8 @@ def prune_orphan_functions(nodes: DataFrame, edges: DataFrame) -> DataFrame:
 
 def prune_graph(nodes: DataFrame, edges: DataFrame,
                 pool=None, slim: DataFrame | None = None,
-                full: DataFrame | None = None
+                full: DataFrame | None = None,
+                directives: dict | None = None
                 ) -> tuple[DataFrame, DataFrame]:
     """`edges` must arrive deduplicated + materialized with HASHED endpoints
     (the pipeline's union checkpoint applies the BTreeSet semantics of
@@ -152,11 +153,13 @@ def prune_graph(nodes: DataFrame, edges: DataFrame,
     All removal logic runs over a SLIM projection (no bodies) joined on the
     8-byte key_h surrogate.  The orphan prune and each CLEAN_DIRECTIVES
     entry yield a drop set read from slim; `keys` is slim minus their
-    union, so each directive adds one subtree to the plan.  Edges touching
-    removed nodes are dropped solely by the final endpoint joins — INNER
-    joins against (key_h, node_key) that both drop dangling edges and swap
-    the surrogates back to canonical key strings: the returned edge table
-    is the public EDGE_COLS shape, surrogate-free."""
+    union, so each directive adds one subtree to the plan.  `directives`
+    (default CLEAN_DIRECTIVES) is the subset whose node types the input
+    has: the pipeline drops an entry whose drop set would be empty.
+    Edges touching removed nodes are dropped solely by the final endpoint
+    joins — INNER joins against (key_h, node_key) that both drop dangling
+    edges and swap the surrogates back to canonical key strings: the
+    returned edge table is the public EDGE_COLS shape, surrogate-free."""
     # slim IS checkpointed: the incoming nodes plan carries the endpoint-drop
     # anti-join over the call cascade, and prune_orphan + the directives read
     # slim ~8 times — uncheckpointed, each read replays the cascade.
@@ -171,8 +174,10 @@ def prune_graph(nodes: DataFrame, edges: DataFrame,
 
     removed = prune_orphan_functions(slim, edges)
     drops = [removed]
-    for lang, directives in CLEAN_DIRECTIVES.items():
-        for kind, *args in directives:
+    if directives is None:
+        directives = CLEAN_DIRECTIVES
+    for lang, entries in directives.items():
+        for kind, *args in entries:
             if kind == "dedup":
                 drops.append(dedup_datamodels_vs_classes(
                     slim, edges, removed, lang, *args))

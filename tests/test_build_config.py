@@ -1,6 +1,7 @@
-"""build_graph validates its environment knobs before any Spark work, and runs
+"""build_graph validates its environment knobs before any Spark work, runs
 every job it launches on Spark's interpreted evaluators whatever the caller's
-codegen settings are."""
+codegen settings are, and constructs only the consumers its census admits
+without changing the graph."""
 
 import contextlib
 
@@ -49,11 +50,13 @@ def _compiled(spark) -> int:
 @pytest.fixture(scope="module")
 def interpreted_build(spark):
     """One build of the 3-language source: (classes compiled inside
-    build_graph, graph digest)."""
+    build_graph, graph digest, build metrics)."""
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     from perfbench.harness import graph_digest
-    from stakgraph_spark.pipeline import build_graph, interpreted
+    from stakgraph_spark.pipeline import Census, build_graph, interpreted
+    from stakgraph_spark.schema import RAW_SCHEMA
 
     src = _source(spark)
     # Spark has no interpreted form of the row joiner a partial hash
@@ -62,17 +65,26 @@ def interpreted_build(spark):
     # per-repo minimum path depth in detect_packages (string key, int
     # buffer): compile that shape first, so the count below holds only
     # what the codegen mode governs.
+    # Likewise an Observation's collect_set buffer (the build's census) is
+    # serialized after its task ends, outside the session's settings, with
+    # one generated projection per buffer shape: compile the census's.
+    raw_row = {"rec": "node", "lang": "go", "node_type": "Function"}
+    raw = spark.createDataFrame(
+        [tuple(raw_row.get(f.name) for f in RAW_SCHEMA.fields)], RAW_SCHEMA)
     with interpreted(spark):
         (src.groupBy("repo")
          .agg(F.min(F.size(F.split("path", "/")))).collect())
+        obs = Observation()
+        raw.observe(obs, Census.column().alias("kinds")).collect()
+        assert obs.get["kinds"]
     before = _compiled(spark)
     g = build_graph(spark, src)
     compiled = _compiled(spark) - before
-    return compiled, graph_digest(g.nodes, g.edges)
+    return compiled, graph_digest(g.nodes, g.edges), g.metrics
 
 
 def test_build_compiles_no_code(interpreted_build):
-    compiled, _ = interpreted_build
+    compiled = interpreted_build[0]
     assert compiled == 0, f"{compiled} classes compiled inside build_graph"
 
 
@@ -141,3 +153,91 @@ def test_runner_link_stage_interpreted(spark, monkeypatch, tmp_path):
         assert spark.conf.getAll.get(MODE) == "FALLBACK"
     finally:
         spark.conf.unset(MODE)
+
+
+# ---------------------------------------------------------------- census
+
+def _corpus(spark):
+    """A tiny generated corpus over all 15 languages."""
+    from perfbench.corpus import Shape, make_corpus
+    from stakgraph_spark.schema import SOURCE_SCHEMA
+
+    corpus = make_corpus(7, Shape(repos=3, files_per_slice=1,
+                                  langs_per_repo=5))
+    assert len({r["lang"] for r in corpus.rows}) == 15
+    return spark.createDataFrame(corpus.rows, SOURCE_SCHEMA)
+
+
+def _census(metrics) -> dict:
+    return next(m for m in metrics if m["stage"] == "census")
+
+
+def test_census_reported(interpreted_build):
+    """The census entry names what the input holds and what it skipped;
+    every entry keeps its stage and t."""
+    metrics = interpreted_build[2]
+    assert all({"stage", "t"} <= m.keys() for m in metrics), metrics
+    from stakgraph_spark.pipeline import GATES
+
+    census = _census(metrics)
+    assert ("node", "go", "Function") in census["kinds"], census
+    # no IntegrationTest in the source: no indirect-test table; the call
+    # family has no gate and is always built
+    assert "indirect_tests" in census["skipped"], census
+    assert "calls" not in census["skipped"], census
+    assert all(s in GATES or s.startswith("prune.")
+               for s in census["skipped"]), census
+
+
+@pytest.mark.parametrize("source", ["three_langs", "all_langs"])
+def test_census_gates_exact(spark, interpreted_build, monkeypatch, source):
+    """A build with every gate open (the census reports every kind as
+    present) has the same nodes and edges as the gated build."""
+    from perfbench.harness import graph_digest, same_graph
+    from stakgraph_spark import pipeline
+
+    if source == "three_langs":
+        src, gated = _source(spark), interpreted_build[1]
+    else:
+        src = _corpus(spark)
+        g = pipeline.build_graph(spark, src)
+        assert _census(g.metrics)["skipped"]
+        gated = graph_digest(g.nodes, g.edges)
+    monkeypatch.setattr(pipeline.Census, "has", lambda self, *term: True)
+    g = pipeline.build_graph(spark, src)
+    assert _census(g.metrics)["skipped"] == []
+    assert same_graph(graph_digest(g.nodes, g.edges), gated)
+
+
+def test_gate_kinds_exist():
+    """Every kind a gate names is one the extractors can emit: a misspelt
+    gate would drop its consumer on every input."""
+    import pathlib
+    import re
+
+    from stakgraph_spark import prune
+    from stakgraph_spark.langspec import LANGS as LANG_NAMES
+    from stakgraph_spark.pipeline import GATES
+    from stakgraph_spark.schema import NODE_TYPES
+
+    text = "".join(p.read_text() for p in (
+        pathlib.Path(prune.__file__).parent / "extract").glob("*.py"))
+    mention_kinds = (
+        set(re.findall(r'^M_[A-Z_]+\s*=\s*"(\w+)"', text, re.M))
+        | set(re.findall(r'mention\("(\w+)"', text)))
+    assert {"call", "import", "test_class"} <= mention_kinds
+    for name, alternatives in GATES.items():
+        assert alternatives, name
+        for alt in alternatives:
+            for rec, kind, langs in alt:
+                if rec == "node":
+                    assert kind in NODE_TYPES, (name, kind)
+                elif rec == "mention":
+                    assert kind in mention_kinds, (name, kind)
+                else:
+                    assert (rec, kind) == ("fat", None), (name, rec, kind)
+                assert set(langs) <= set(LANG_NAMES), (name, langs)
+    for lang, entries in prune.CLEAN_DIRECTIVES.items():
+        assert lang in LANG_NAMES
+        for d in entries:
+            assert d[1] in NODE_TYPES, (lang, d)

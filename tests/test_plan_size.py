@@ -77,7 +77,10 @@ def test_build_graph_plans_bounded(spark, plan_log):
     # the app.use prefix fact exists, so the endpoint-group rename ran
     # (and was materialized through ckpt)
     assert eps == {"/api/users"}, eps
-    assert len(plan_log) >= 15, plan_log
+    # the spy saw the whole build: this source's census gates out the
+    # fat-body and indirect-test tables, and its 8 edge families fill two
+    # sub-union groups, which leaves 14 materializations
+    assert len(plan_log) >= 14, plan_log
     assert max(plan_log) <= PLAN_BOUND, sorted(plan_log)
 
 
