@@ -1,33 +1,12 @@
-"""Stage-checkpoint strategy, shared by the pipeline/link/prune planes.
+"""Stage checkpoints, shared by the pipeline/link/prune planes.
 
-Two interchangeable materialization backends:
-
-* local (default)          — `localCheckpoint` with serialized+compressed
-                             blocks.  Zero I/O, but block registration is
-                             single-threaded on the driver — a measured
-                             data-proportional serial cost at bench scale
-                             (VERDICT r03), and RDD blocks are row-oriented:
-                             every downstream read deserializes all columns.
-* parquet (STAKGRAPH_CKPT=parquet) — write the stage to parquet in a temp
-                             dir and read it back.  Costs one parallel I/O
-                             pass but gives columnar pruning + predicate
-                             pushdown to the ~10 families that re-read each
-                             stage, and the write is executor-parallel (no
-                             driver serial section).  This is also exactly
-                             the cluster story (`runner.py` stage tables),
-                             so the A/B doubles as a rehearsal of the
-                             production plan.
-
-BENCH/ records the A/B outcome.
+One backend: `localCheckpoint` with serialized blocks, which truncates a
+stage's lineage so its consumers plan against a shallow scan.  Every
+checkpoint is registered in `_LIVE`, so a benchmark harness can release the
+previous rep's blocks with `release_all` before the next rep starts.
 """
 
 from __future__ import annotations
-
-import atexit
-import itertools
-import os
-import shutil
-import tempfile
 
 from pyspark.storagelevel import StorageLevel
 
@@ -36,8 +15,6 @@ from pyspark.storagelevel import StorageLevel
 # throttled exactly the high-parallelism runs the scaling target measures
 SER_LEVEL = StorageLevel.MEMORY_AND_DISK
 
-_SEQ = itertools.count()
-_DIR: str | None = None
 # live localCheckpoint DataFrames, so a bench harness can release the
 # previous rep's RDD blocks SYNCHRONOUSLY before the next rep starts —
 # ContextCleaner unpersists asynchronously after a driver GC, and the lag
@@ -74,34 +51,12 @@ def release_all() -> int:
     return n
 
 
-def _parquet_dir() -> str:
-    global _DIR
-    if _DIR is None:
-        _DIR = tempfile.mkdtemp(prefix="stakgraph_ckpt_")
-        atexit.register(shutil.rmtree, _DIR, True)
-    return _DIR
-
-
 def ckpt(df, eager: bool = True):
     """Materialize a stage DataFrame and truncate its lineage.
 
     eager=False marks single-consumer stages where an immediate blocking
-    materialization is pure barrier cost; BOTH backends honor it (parquet
-    mode used to force an eager write, re-introducing exactly the barriers
-    the lazy call sites exist to avoid — ADVICE r04).  The mode env is read
-    per call so tests/benches can flip backends after import."""
-    if os.environ.get("STAKGRAPH_CKPT", "local") == "parquet":
-        if not eager:
-            # no lazy parquet materialization exists; pure pass-through so
-            # the lineage really is left intact.  (A lazy localCheckpoint
-            # here would lazily truncate lineage and pin RDD blocks —
-            # re-introducing the driver/block behavior parquet mode exists
-            # to avoid, and localCheckpoint is unsafe under executor loss
-            # in the cluster deployment this mode rehearses — ADVICE r05.)
-            return df
-        path = os.path.join(_parquet_dir(), f"c{next(_SEQ)}")
-        df.write.mode("overwrite").parquet(path)
-        return df.sparkSession.read.parquet(path)
+    materialization is pure barrier cost: the blocks are written when the
+    consumer first reads them."""
     out = df.localCheckpoint(eager=eager, storageLevel=SER_LEVEL)
     _LIVE.append(out)
     if len(_LIVE) > _LIVE_MAX:

@@ -144,6 +144,38 @@ def _norm_edges_h(df: DataFrame) -> DataFrame:
         "edge_type", "operand", "confidence", "strategy", "repo", "lang")
 
 
+# Dedup survivors.  The reference keeps one node per canonical key and one
+# edge per (src, dst, type) in a BTreeMap/BTreeSet (btreemap_graph.rs:51-55),
+# so its graph depends on the input only.  A key here can arrive more than
+# once with different values (a Language node from every repo that has the
+# language, a Directory node from every repo and language under it, an edge
+# found by two families), and each survivor is the least row of its group
+# under one total order, never the first row a partition happens to hold:
+#   nodes       least (repo, lang, every other column), meta compared as its
+#               sorted entries (a map is not orderable)
+#   edges       highest confidence, null lowest; then least
+#               (strategy, operand, repo, lang)
+#   fat bodies  least body per key_h
+# Every column is in its order, so rows tie only when they are identical.
+
+
+def _node_survivors(nodes: DataFrame) -> DataFrame:
+    order = F.struct("repo", "lang", *[
+        F.array_sort(F.map_entries(c)) if c == "meta" else F.col(c)
+        for c in nodes.columns if c not in ("repo", "lang", "node_key")])
+    return (nodes.groupBy("node_key")
+            .agg(F.min_by(F.struct(*nodes.columns), order).alias("n"))
+            .select("n.*"))
+
+
+def _edge_survivors(edges: DataFrame) -> DataFrame:
+    order = F.struct(F.col("confidence").isNull(), -F.col("confidence"),
+                     "strategy", "operand", "repo", "lang")
+    return (edges.groupBy("src_h", "dst_h", "edge_type")
+            .agg(F.min_by(F.struct(*EDGE_COLS_H), order).alias("e"))
+            .select("e.*"))
+
+
 def file_plane(src: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Repository / Language / Directory / File nodes + containment edges.
 
@@ -353,19 +385,6 @@ class Census:
                    for alt in GATES[gate])
 
 
-def _subunion_k() -> int:
-    """Edge families per sub-union checkpoint (STAKGRAPH_SUBUNION_K)."""
-    val = os.environ.get("STAKGRAPH_SUBUNION_K", "5")
-    try:
-        k = int(val)
-    except ValueError:
-        k = 0
-    if k < 1:
-        raise ValueError(
-            f"STAKGRAPH_SUBUNION_K must be a positive integer, got {val!r}")
-    return k
-
-
 def build_graph(spark: SparkSession, source: DataFrame,
                 raw: DataFrame | None = None) -> GraphResult:
     """source (repo,path,commit,lang,content) -> GraphResult.
@@ -376,19 +395,18 @@ def build_graph(spark: SparkSession, source: DataFrame,
     Every job launched here runs `interpreted`; the returned node table's
     last join (body restore) runs when the caller reads it, under the
     caller's settings."""
-    subunion_k = _subunion_k()
     # CONCURRENT DRIVER THREADS (guide §2.6): independent jobs and their
     # Catalyst analysis overlap across driver threads throughout the build.
     pool = ThreadPoolExecutor(max_workers=12)
     try:
         with interpreted(spark):
-            return _build(spark, source, raw, pool, subunion_k)
+            return _build(spark, source, raw, pool)
     finally:
         pool.shutdown(wait=False, cancel_futures=True)
 
 
 def _build(spark: SparkSession, source: DataFrame, raw: DataFrame | None,
-           pool: ThreadPoolExecutor, subunion_k: int) -> GraphResult:
+           pool: ThreadPoolExecutor) -> GraphResult:
     metrics: list[dict] = []
     t0 = time.time()
 
@@ -509,8 +527,6 @@ def _build(spark: SparkSession, source: DataFrame, raw: DataFrame | None,
     # construction); allowMissingColumns fills the slimming columns with null
     nodes = fp_nodes.unionByName(ex_nodes, allowMissingColumns=True)
     nodes = _key(nodes)
-    # BTreeMap insert = last-write-wins on canonical key; order-insensitive
-    # here (duplicate keys are re-extractions of the same entity).
     # ONE node checkpoint serves both the link plane and the final payload
     # restore: the extraction UDF already stripped span-recomputable bodies
     # before they crossed Arrow (schema.py RAW_SCHEMA header), so the only
@@ -519,7 +535,7 @@ def _build(spark: SparkSession, source: DataFrame, raw: DataFrame | None,
     # cost: one more materialization job whose tail stragglers idle every
     # core at high parallelism (measured 26% idle at the pinned 8-core
     # scaling leg).  The cascade's nonempty-body rule rides has_body.
-    nodes = _ckpt(nodes.dropDuplicates(["node_key"])
+    nodes = _ckpt(_node_survivors(nodes)
                   .withColumn("key_h", F.xxhash64("node_key"))
                   .withColumn("has_body",
                               (F.length(F.coalesce("body", F.lit(""))) > 0)
@@ -606,8 +622,6 @@ def _build(spark: SparkSession, source: DataFrame, raw: DataFrame | None,
                   .unionByName(hm_cascade.withColumn("mk", F.lit("handler")),
                                allowMissingColumns=True))
 
-    # interface dispatch (java): receiver typed as an interface resolves to
-    # an implementing class's method (java_resolver.rs:239-259)
     # java + csharp: receiver typed as an interface resolves to an
     # implementing class's method (java_resolver.rs:239-259,
     # cs_resolver.rs:215-262)
@@ -861,35 +875,8 @@ def _build(spark: SparkSession, source: DataFrame, raw: DataFrame | None,
         fused_edges, api_edges, itest_edges, e2e_edges, ruby_dm_edges,
         e2e_testid_edges, uses_edges, php_handler, ng_renders, fp_edges)
         if f is not None]
-    # Sub-union checkpoints (default): the families are materialized as a
-    # few concurrently-submitted checkpoint jobs of ~5 families each, and
-    # the dedup below unions the CHECKPOINTED RDDs in the same order.  A
-    # single 19-family union job carried every family's physical subtree
-    # in one task binary, and each of its ~165 tasks re-paid deserializing
-    # it: 113.8 of that stage's 182.8 core-seconds were Executor
-    # Deserialize Time (event logs, 12 copies, measured with generated
-    # code; the binary is the serialized plan either way).  Grouping cuts
-    # the per-task binary to ~a quarter and the final dedup map stage
-    # reads shallow LogicalRDD scans: total app deserialize 94.0 -> 44.6
-    # core-s, warm kg wall 47.6/56.3 -> 43.8/39.8 s (interleaved A/B).
-    #
-    # Output-identity argument (the dedup's dropDuplicates survivor is
-    # partition-layout-sensitive — 240 duplicate (src_h, dst_h, edge_type)
-    # groups carry value-distinct rows): each family's AQE plan and stats
-    # are unchanged, so its coalesced output partitions are unchanged;
-    # localCheckpoint materializes those partitions as-is; the union
-    # concatenates them in the same code order, so the dedup map stage
-    # sees byte-identical partitions at the same indices as the old
-    # in-stage union.  Verified: order-insensitive full-row digest
-    # (count + sum + xor of xxhash64 over every column, meta canonicalized)
-    # of nodes AND edges is bit-identical to the single-union build at 12
-    # copies, and stable across repeated runs.  A family the census gates
-    # out would have been empty, but dropping it regroups the families and
-    # can shift later partitions' indices, so a value-distinct duplicate
-    # group's survivor may move (ROADMAP item 3); the node and edge-key
-    # digests do not depend on it.
-    groups = [fams[i:i + subunion_k]
-              for i in range(0, len(fams), subunion_k)]
+    # five families per job keep task binaries small; the dedup is layout-free
+    groups = [fams[i:i + 5] for i in range(0, len(fams), 5)]
 
     def _sub(g):
         return _ckpt(reduce(DataFrame.unionByName, map(_norm_edges_h, g)))
@@ -900,7 +887,7 @@ def _build(spark: SparkSession, source: DataFrame, raw: DataFrame | None,
     # family RDDs — one shuffle, shallow plan.  Dedup key is the surrogate
     # pair: a false merge needs two distinct edges colliding on BOTH 64-bit
     # endpoint hashes with the same edge_type (p ~ 1e-20 at 10^9 edges).
-    edges = _ckpt(edges.dropDuplicates(["src_h", "dst_h", "edge_type"]))
+    edges = _ckpt(_edge_survivors(edges))
     stage("edges_linked")
 
     # indirect integration tests: IntegrationTest -CALLS-> helper whose body
@@ -929,21 +916,16 @@ def _build(spark: SparkSession, source: DataFrame, raw: DataFrame | None,
             nodes_final, edges)
 
     # fat-companion body table, same overlap treatment as `ind` (it
-    # depends only on the RAW checkpoint): dedup-to-unique key_h is
-    # layout-insensitive here — fat rows have ZERO duplicate key_h groups
-    # (each fat companion is emitted once per node; verified at 12
-    # copies), so dropDuplicates keeps the same single row per key under
-    # any partitioning — and materializing it during the prune plane takes
-    # its filter/key/dedup subtree out of the final node plan's count-time
-    # AQE stepping.
+    # depends only on the RAW checkpoint): materializing it during the
+    # prune plane takes its filter/key/dedup subtree out of the final node
+    # plan's count-time AQE stepping.
     fut_fat = None
     if gate("fat_bodies"):
         fat_lazy = (_key(raw.where(F.col("rec") == "fat")
                          .select("node_type", "name", "file", "start", "body",
                                  "meta", "repo", "lang"))
-                    .select(F.xxhash64("node_key").alias("key_h"),
-                            F.col("body").alias("_fat_body"))
-                    .dropDuplicates(["key_h"]))
+                    .groupBy(F.xxhash64("node_key").alias("key_h"))
+                    .agg(F.min("body").alias("_fat_body")))
         fut_fat = pool.submit(lambda: _ckpt(fat_lazy))
 
     # ---------------- prune plane ----------------
@@ -985,7 +967,7 @@ def _build(spark: SparkSession, source: DataFrame, raw: DataFrame | None,
     # bodies are recomputed JVM-side from the source table with one join
     # keyed on (repo, lang, file) (the body_mode=='span' term keeps
     # non-span rows from matching); the rare non-span remainder comes from
-    # the rec='fat' companion rows, deduped to mirror the node dedup
+    # the rec='fat' companion rows, one body per key_h
     # (materialized above, concurrently with the prune plane).
     src_lines = src.select(
         F.col("repo").alias("_sl_repo"), F.col("lang").alias("_sl_lang"),

@@ -1,7 +1,7 @@
-"""build_graph validates its environment knobs before any Spark work, runs
-every job it launches on Spark's interpreted evaluators whatever the caller's
-codegen settings are, and constructs only the consumers its census admits
-without changing the graph."""
+"""build_graph runs every job it launches on Spark's interpreted evaluators
+whatever the caller's codegen settings are, constructs only the consumers its
+census admits without changing the graph, and builds one graph from one input
+whatever the partitioning or row order."""
 
 import contextlib
 
@@ -10,25 +10,6 @@ import pytest
 from test_plan_size import LANG, SOURCE
 
 MODE = "spark.sql.codegen.factoryMode"
-
-
-@pytest.mark.parametrize("value", ["0", "-2", "abc", "2.5", ""])
-def test_subunion_k_rejected(spark, monkeypatch, value):
-    from stakgraph_spark.pipeline import build_graph
-    from stakgraph_spark.schema import SOURCE_SCHEMA
-
-    monkeypatch.setenv("STAKGRAPH_SUBUNION_K", value)
-    with pytest.raises(ValueError, match="STAKGRAPH_SUBUNION_K"):
-        build_graph(spark, spark.createDataFrame([], SOURCE_SCHEMA))
-
-
-def test_subunion_k_parsed(monkeypatch):
-    from stakgraph_spark.pipeline import _subunion_k
-
-    monkeypatch.delenv("STAKGRAPH_SUBUNION_K", raising=False)
-    assert _subunion_k() == 5
-    monkeypatch.setenv("STAKGRAPH_SUBUNION_K", "3")
-    assert _subunion_k() == 3
 
 
 # ---------------------------------------------------------------- codegen
@@ -241,3 +222,89 @@ def test_gate_kinds_exist():
         assert lang in LANG_NAMES
         for d in entries:
             assert d[1] in NODE_TYPES, (lang, d)
+
+
+# ---------------------------------------------------------------- layout
+
+# Six repos share python and go: each yields a Language node of the same
+# key.  Each holds lib/util with a python and a go file: every (repo, lang)
+# yields a Directory node of the same key, and a Contains edge from lib that
+# differs only in repo and lang.
+REPOS = ["alpha", "beta", "gamma", "delta", "epsilon", "zeta"]
+LAYOUT_ROWS = (
+    [("alpha", p, LANG[p.rsplit(".", 1)[1]], c) for p, c in SOURCE]
+    + [row for r in REPOS for row in (
+        (r, f"lib/util/{r}.py", "python",
+         f"def {r}_conv(x):\n    return x\n"),
+        (r, f"lib/util/{r}.go", "go",
+         f"package util\n\nfunc {r.title()}() int {{\n\treturn 1\n}}\n"))])
+
+
+def _layout_build(spark, partitions: int, rows):
+    from perfbench.harness import graph_digest
+    from stakgraph_spark.pipeline import build_graph
+    from stakgraph_spark.schema import SOURCE_SCHEMA
+
+    conf = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, str(partitions))
+    try:
+        g = build_graph(spark, spark.createDataFrame(
+            [(r, p, "c0", lang, c) for r, p, lang, c in rows],
+            SOURCE_SCHEMA))
+        return g, graph_digest(g.nodes, g.edges)
+    finally:
+        spark.conf.set(conf, prev)
+
+
+def test_graph_independent_of_layout(spark):
+    """One input built at 1, 7 and 32 shuffle partitions, and in reversed
+    row order, gives one graph, every edge column included: each duplicate
+    key keeps the least row under the pipeline's survivor order."""
+    builds = {name: _layout_build(spark, parts, rows) for name, parts, rows in
+              [("1", 1, LAYOUT_ROWS), ("7", 7, LAYOUT_ROWS),
+               ("32", 32, LAYOUT_ROWS), ("7 reversed", 7, LAYOUT_ROWS[::-1])]}
+    g, first = builds["1"]
+    for name, (_, d) in builds.items():
+        for part in ("nodes", "edges", "edges_full_row"):
+            assert d[part] == first[part], (name, part)
+
+    nodes = {r["node_key"]: r for r in g.nodes.select(
+        "node_key", "node_type", "name", "repo", "lang").collect()}
+    edges = g.edges.select("src_key", "dst_key", "edge_type", "repo",
+                           "lang").collect()
+
+    def one(node_type, name):
+        (row,) = [r for r in nodes.values()
+                  if (r["node_type"], r["name"]) == (node_type, name)]
+        return row
+
+    # every repo reaches the python Language node; its repo is the least
+    py = one("Language", "python")
+    assert {nodes[e["src_key"]]["name"] for e in edges
+            if (e["edge_type"], e["dst_key"]) == ("Of", py["node_key"])} \
+        == set(REPOS)
+    assert py["repo"] == "alpha"
+    # lib/util holds go and python files; the Directory node and the
+    # Contains edge from lib each keep the least (repo, lang)
+    util = one("Directory", "util")
+    contains = [e for e in edges if e["edge_type"] == "Contains"]
+    assert {nodes[e["dst_key"]]["lang"] for e in contains
+            if e["src_key"] == util["node_key"]} == {"go", "python"}
+    assert (util["repo"], util["lang"]) == ("alpha", "go")
+    (lib_util,) = [e for e in contains if e["dst_key"] == util["node_key"]]
+    assert nodes[lib_util["src_key"]]["name"] == "lib"
+    assert (lib_util["repo"], lib_util["lang"]) == ("alpha", "go")
+
+
+def test_surrogate_collision_guard(spark, monkeypatch):
+    """STAKGRAPH_CHECK_SURROGATES=1 runs the build-time collision assertion
+    (countDistinct(key_h) == count of deduped node_keys) so a corpus large
+    enough to collide the 64-bit surrogates fails loudly instead of
+    silently merging nodes.  On this source the guard must pass; the
+    negative path is the raise in pipeline._build."""
+    from stakgraph_spark.pipeline import build_graph
+
+    monkeypatch.setenv("STAKGRAPH_CHECK_SURROGATES", "1")
+    g = build_graph(spark, _source(spark))
+    assert g.nodes.count() > 0

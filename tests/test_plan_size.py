@@ -52,7 +52,6 @@ def plan_log(monkeypatch):
     """Analyzed-plan line count of every localCheckpoint, in call order."""
     from pyspark.sql.classic.dataframe import DataFrame
 
-    monkeypatch.delenv("STAKGRAPH_CKPT", raising=False)
     log = []
     orig = DataFrame.localCheckpoint
 

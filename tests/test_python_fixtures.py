@@ -57,18 +57,3 @@ def test_sha256_invariant(spark, py_graph):
     total = joined.count()
     assert total > 0
     assert bad == 0
-
-
-def test_surrogate_collision_guard(spark, monkeypatch):
-    """STAKGRAPH_CHECK_SURROGATES=1 runs the build-time collision assertion
-    (countDistinct(key_h) == count of deduped node_keys) so a corpus large
-    enough to collide the 64-bit surrogates fails loudly instead of
-    silently merging nodes (VERDICT r05 #7).  On fixture data the guard
-    must pass; the negative path is the raise in pipeline.build_graph."""
-    from stakgraph_spark.pipeline import build_graph
-    from stakgraph_spark.source import fixture_source_df
-
-    monkeypatch.setenv("STAKGRAPH_CHECK_SURROGATES", "1")
-    src = fixture_source_df(spark, {"python/cli": "python"})
-    g = build_graph(spark, src)
-    assert g.nodes.count() > 0
