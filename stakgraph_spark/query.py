@@ -13,6 +13,8 @@ import re
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (IntegerType, LongType, StringType, StructField,
+                               StructType)
 
 _TOKEN_RE = re.compile(r"[^a-z0-9_]+")
 
@@ -188,6 +190,19 @@ def build_fulltext_index(nodes: DataFrame) -> DataFrame:
 
 FULLTEXT_BUCKETS = 64
 
+# what a write_fulltext_index table reads back as (the partition column
+# `bucket` last); reads pass it explicitly, since an index written from an
+# empty node table leaves no parquet footer to infer one from
+FULLTEXT_INDEX_SCHEMA = StructType([
+    StructField("term", StringType()),
+    StructField("node_key", StringType()),
+    StructField("node_type", StringType()),
+    StructField("name", StringType()),
+    StructField("file", StringType()),
+    StructField("tf", LongType()),
+    StructField("bucket", IntegerType()),
+])
+
 
 def write_fulltext_index(nodes: DataFrame, path: str,
                          buckets: int = FULLTEXT_BUCKETS) -> None:
@@ -225,7 +240,7 @@ def fulltext_search_on_disk(spark, path: str, query: str,
     the row-level term filter — per-query cost is O(matching buckets), not
     a scan of the whole index."""
     terms = [t for t in _TOKEN_RE.split(query.lower()) if t]
-    idx = spark.read.parquet(path)
+    idx = spark.read.schema(FULLTEXT_INDEX_SCHEMA).parquet(path)
     if not terms:
         return (idx.select("node_key", "node_type", "name", "file",
                            F.lit(0).cast("long").alias("score")).limit(0))

@@ -249,7 +249,7 @@ class PipelineRunner:
         # graph was, skipped on a clean resume) ----
         fulltext_rebuilt = False
         if self.fulltext_index:
-            from .query import write_fulltext_index
+            from .query import FULLTEXT_INDEX_SCHEMA, write_fulltext_index
 
             # staleness by RECENCY, not existence (ADVICE r06): the index is
             # fresh only if its latest 'done' mark is newer than the latest
@@ -270,7 +270,8 @@ class PipelineRunner:
                 self._mark_df("fulltext_index", self.spark.createDataFrame(
                     [("*", "*")], ["repo", "lang"]))
                 fulltext_rebuilt = True
-            n_terms = (self.spark.read.parquet(self.fulltext_path)
+            n_terms = (self.spark.read.schema(FULLTEXT_INDEX_SCHEMA)
+                       .parquet(self.fulltext_path)
                        .select("term").distinct().count())
             self._metric("fulltext_index", (time.time() - t0) * 1000,
                          {"rebuilt": fulltext_rebuilt,

@@ -9,6 +9,14 @@
               (names without newline) equals annotation count
 
 P/R target >= 0.95 per fixture (BASELINE.md).
+
+Source trees.  The annotation checks and the tests marked ``needs_reference``
+read the reference's fixture tree (``REFERENCE_TESTING``); where it is absent
+the marked tests skip.  Tests whose checks do not depend on what the
+fixture files say read their source through ``source_rows`` /
+``source_df``: the reference tree when it exists, else the committed
+stand-in tree ``tests/standin/`` (same layout, so repo names and paths come
+out the same: ``fixtures/python/web``, ``src/testing/python/web/...``).
 """
 
 from __future__ import annotations
@@ -19,12 +27,34 @@ from dataclasses import dataclass, field
 
 import sys
 
+import pytest
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from stakgraph_spark.keys import node_key  # noqa: E402
 from stakgraph_spark.langspec import LANGS, annotation_prefix_for  # noqa: E402
-from stakgraph_spark.schema import NODE_TYPES  # noqa: E402
-from stakgraph_spark.source import REFERENCE_TESTING  # noqa: E402
+from stakgraph_spark.schema import NODE_TYPES, SOURCE_SCHEMA  # noqa: E402
+from stakgraph_spark.source import REFERENCE_TESTING, walk_fixture  # noqa: E402
+
+STANDIN_TESTING = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                               "standin")
+
+needs_reference = pytest.mark.skipif(
+    not os.path.isdir(REFERENCE_TESTING),
+    reason=f"reads the reference fixture tree at {REFERENCE_TESTING}")
+
+
+def source_rows(fixtures: dict[str, str]) -> list[dict]:
+    """Source rows of `fixtures` (fixture dir -> language) from the reference
+    tree when it exists, else from the stand-in tree."""
+    root = (REFERENCE_TESTING if os.path.isdir(REFERENCE_TESTING)
+            else STANDIN_TESTING)
+    return [r for fdir, lang in fixtures.items()
+            for r in walk_fixture(fdir, lang, root=root)]
+
+
+def source_df(spark, fixtures: dict[str, str]):
+    return spark.createDataFrame(source_rows(fixtures), SOURCE_SCHEMA)
 
 EDGE_TYPES = {"Calls", "Uses", "Operand", "ArgOf", "Contains", "Imports", "Of",
               "Handler", "Includes", "Renders", "ParentOf", "Implements",

@@ -7,6 +7,8 @@ drives the transitive check."""
 
 import pytest
 
+from harness import needs_reference
+
 # (fixture, lang, data_model_name(Person), pkg file)
 BACKENDS = [
     ("go", "go", "Person", "go.mod"),
@@ -33,6 +35,7 @@ def backend_graph(spark):
     return nodes, edges
 
 
+@needs_reference
 @pytest.mark.parametrize("fixture,lang,dm,pkg", BACKENDS,
                          ids=[b[0] for b in BACKENDS])
 def test_backend(backend_graph, fixture, lang, dm, pkg):

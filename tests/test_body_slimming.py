@@ -15,7 +15,7 @@ from __future__ import annotations
 from stakgraph_spark.extract import extract_batch, get_extractor
 from stakgraph_spark.extract.libs import extract_libs
 from stakgraph_spark.pipeline import build_graph
-from stakgraph_spark.source import fixture_source_df, fixture_source_rows
+from harness import source_df, source_rows
 
 FIXTURES = {"python/web": "python", "go/web": "go"}
 
@@ -37,8 +37,8 @@ def _direct_bodies(rows) -> dict[tuple, str]:
 
 
 def test_graph_bodies_match_extractor_output(spark):
-    rows = fixture_source_rows(FIXTURES)
-    src = fixture_source_df(spark, FIXTURES)
+    rows = source_rows(FIXTURES)
+    src = source_df(spark, FIXTURES)
     expected = _direct_bodies(rows)
 
     g = build_graph(spark, src)
@@ -70,7 +70,7 @@ def test_raw_stream_is_slim(spark):
     and span/fat bookkeeping is consistent."""
     import pandas as pd
 
-    rows = fixture_source_rows(FIXTURES)
+    rows = source_rows(FIXTURES)
     pdf = pd.DataFrame([{k: r[k] for k in ("repo", "path", "lang", "content")}
                         for r in rows])
     out = pd.concat(list(extract_batch(iter([pdf]))))

@@ -3,11 +3,11 @@ unit/integration/e2e coverage percentages over a built fixture graph."""
 
 
 def test_coverage_tiers_go(spark):
+    from harness import source_df
     from stakgraph_spark.pipeline import build_graph
     from stakgraph_spark.query import coverage_stats
-    from stakgraph_spark.source import fixture_source_df
 
-    g = build_graph(spark, fixture_source_df(spark, {"go": "go"}))
+    g = build_graph(spark, source_df(spark, {"go": "go"}))
     rows = {(r["lang"], r["tier"]): r
             for r in coverage_stats(g.nodes, g.edges).collect()}
 

@@ -4,6 +4,8 @@ definition becomes node.docs, '@ast ' annotation lines filtered
 
 import pytest
 
+from harness import needs_reference
+
 DOC_FIXTURES = {"go": "go", "rust": "rust"}
 
 
@@ -27,12 +29,14 @@ def _docs_of(nodes, repo, node_type, name):
     assert rows, f"{node_type} {name} not found"
     return [r["docs"] for r in rows]
 
+@needs_reference
 def test_go_function_docs(doc_graph):
     docs = _docs_of(doc_graph, "go", "Function", "CreateOrEditPerson")
     assert any(d == "check that update owner_pub_key does in fact throws an error"
                for d in docs), docs
 
 
+@needs_reference
 def test_rust_struct_docs(doc_graph):
     # struct Person is extracted as Class and/or DataModel; either carries docs
     found = []

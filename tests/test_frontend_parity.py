@@ -13,6 +13,8 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from harness import needs_reference
+
 # client -> (fixtures dict, pkg file names); swift builds BOTH apps as ONE
 # repo, exactly like FrontendTester::from_repo("src/testing/swift")
 CLIENTS = {
@@ -36,6 +38,7 @@ def client_graphs(spark):
     return out
 
 
+@needs_reference
 @pytest.mark.parametrize("client", list(CLIENTS))
 def test_frontend(client_graphs, client):
     from stakgraph_spark.query import find_resource_nodes

@@ -4,16 +4,18 @@ assertions adapted per manifest format)."""
 
 import pytest
 
+from harness import needs_reference
+
 LIB_FIXTURES = {"rust": "rust", "go": "go", "python/web": "python",
                 "react": "react"}
 
 
 @pytest.fixture(scope="module")
 def lib_graph(spark):
+    from harness import source_df
     from stakgraph_spark.pipeline import build_graph
-    from stakgraph_spark.source import fixture_source_df
 
-    src = fixture_source_df(spark, LIB_FIXTURES)
+    src = source_df(spark, LIB_FIXTURES)
     g = build_graph(spark, src)
     nodes = g.nodes.persist()
     edges = g.edges.persist()
@@ -28,6 +30,7 @@ def _libs(nodes, repo):
     return {r["name"]: (r["meta"] or {}) for r in rows}
 
 
+@needs_reference
 def test_rust_cargo_libraries(lib_graph):
     nodes, _ = lib_graph
     libs = _libs(nodes, "rust")
@@ -39,6 +42,7 @@ def test_rust_cargo_libraries(lib_graph):
     assert "version" not in libs  # the version pair itself is skipped
 
 
+@needs_reference
 def test_go_mod_libraries(lib_graph):
     nodes, _ = lib_graph
     libs = _libs(nodes, "go")
@@ -47,6 +51,7 @@ def test_go_mod_libraries(lib_graph):
     assert libs.get("github.com/rs/cors", {}).get("version") == "v1.11.1"
 
 
+@needs_reference
 def test_python_requirements_libraries(lib_graph):
     nodes, _ = lib_graph
     libs = _libs(nodes, "python/web")
@@ -54,6 +59,7 @@ def test_python_requirements_libraries(lib_graph):
         assert name in libs, f"missing {name}"
 
 
+@needs_reference
 def test_ts_package_json_libraries(lib_graph):
     nodes, _ = lib_graph
     libs = _libs(nodes, "react")

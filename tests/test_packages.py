@@ -3,6 +3,8 @@ repo.rs:213-265) on the reference monorepo fixtures."""
 
 import pytest
 
+from harness import needs_reference
+
 
 @pytest.fixture(scope="module")
 def mono_graph(spark):
@@ -46,6 +48,7 @@ def _pkgs(nodes, repo):
             .collect()}
 
 
+@needs_reference
 def test_python_rust_monorepo_packages(mono_graph):
     nodes, edges = mono_graph
     pkgs = _pkgs(nodes, "fixtures/monorepo_python_rust")
@@ -57,6 +60,7 @@ def test_python_rust_monorepo_packages(mono_graph):
     assert pkgs["web"]["language"] == "python"
 
 
+@needs_reference
 def test_rust_workspace_packages(mono_graph):
     nodes, edges = mono_graph
     pkgs = _pkgs(nodes, "fixtures/monorepo_rust")

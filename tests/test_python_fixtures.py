@@ -2,7 +2,7 @@
 
 import pytest
 
-from harness import graph_index_for_repo, verify_fixture
+from harness import graph_index_for_repo, source_df, verify_fixture
 
 PY_FIXTURES = ["python/web", "python/data_science", "python/cli",
                "python/services", "python/module_calls"]
@@ -11,9 +11,8 @@ PY_FIXTURES = ["python/web", "python/data_science", "python/cli",
 @pytest.fixture(scope="module")
 def py_graph(spark):
     from stakgraph_spark.pipeline import build_graph
-    from stakgraph_spark.source import fixture_source_df
 
-    src = fixture_source_df(spark, {f: "python" for f in PY_FIXTURES})
+    src = source_df(spark, {f: "python" for f in PY_FIXTURES})
     g = build_graph(spark, src)
     nodes = g.nodes.persist()
     edges = g.edges.persist()
@@ -46,10 +45,8 @@ def test_sha256_invariant(spark, py_graph):
     """File nodes carry hash == sha2(source.content, 256) per row."""
     from pyspark.sql import functions as F
 
-    from stakgraph_spark.source import fixture_source_df
-
     nodes, _ = py_graph
-    src = fixture_source_df(spark, {f: "python" for f in PY_FIXTURES})
+    src = source_df(spark, {f: "python" for f in PY_FIXTURES})
     files = nodes.where(F.col("node_type") == "File").select("file", "hash")
     joined = (src.withColumn("expect", F.sha2(F.coalesce("content", F.lit("")), 256))
               .join(files, src.path == files.file, "inner"))

@@ -10,12 +10,12 @@ import tempfile
 
 def test_resume_skips_done_partitions(spark):
     from stakgraph_spark.runner import PipelineRunner
-    from stakgraph_spark.source import fixture_source_df
+    from harness import source_df
 
     workdir = tempfile.mkdtemp(prefix="kg_resume_")
     try:
-        full = fixture_source_df(spark, {"python/web": "python",
-                                         "python/cli": "python"})
+        full = source_df(spark, {"python/web": "python",
+                                 "python/cli": "python"})
 
         # first run: only one repo's partition
         r1 = PipelineRunner(spark, workdir, run_id="run1")
@@ -74,12 +74,12 @@ def test_incremental_update_changed_partition(spark):
     from pyspark.sql import functions as F
 
     from stakgraph_spark.runner import PipelineRunner
-    from stakgraph_spark.source import fixture_source_df
+    from harness import source_df
 
     workdir = tempfile.mkdtemp(prefix="kg_incr_")
     try:
-        v1 = fixture_source_df(spark, {"python/web": "python",
-                                       "python/cli": "python"})
+        v1 = source_df(spark, {"python/web": "python",
+                               "python/cli": "python"})
         r1 = PipelineRunner(spark, workdir, run_id="v1")
         out1 = r1.run(v1)
         assert out1["extracted_partitions"] == 2
@@ -116,12 +116,12 @@ def test_removed_partition_forces_link_rebuild(spark):
     import tempfile
 
     from stakgraph_spark.runner import PipelineRunner
-    from stakgraph_spark.source import fixture_source_df
+    from harness import source_df
 
     workdir = tempfile.mkdtemp(prefix="kg_rm_")
     try:
-        full = fixture_source_df(spark, {"python/web": "python",
-                                         "python/cli": "python"})
+        full = source_df(spark, {"python/web": "python",
+                                 "python/cli": "python"})
         r1 = PipelineRunner(spark, workdir, run_id="v1")
         r1.run(full)
 
@@ -159,11 +159,11 @@ def test_fulltext_index_stage(spark):
 
     from stakgraph_spark.query import fulltext_search, fulltext_search_on_disk
     from stakgraph_spark.runner import PipelineRunner
-    from stakgraph_spark.source import fixture_source_df
+    from harness import source_df
 
     workdir = tempfile.mkdtemp(prefix="kg_ft_")
     try:
-        src = fixture_source_df(spark, {"python/web": "python"})
+        src = source_df(spark, {"python/web": "python"})
         r1 = PipelineRunner(spark, workdir, run_id="ft1", fulltext_index=True)
         out1 = r1.run(src)
         assert out1["fulltext_rebuilt"]
@@ -196,6 +196,30 @@ def test_fulltext_index_stage(spark):
         ft = [m for m in metrics if m["stage"] == "fulltext_index"]
         assert len(ft) == 2 and ft[0]["rebuilt"] and not ft[1]["rebuilt"]
         assert ft[0]["distinct_terms"] > 0
+    finally:
+        shutil.rmtree(workdir, ignore_errors=True)
+
+
+def test_fulltext_index_over_empty_source(spark):
+    """An empty graph writes an index with no parquet footer; the stage's
+    term count and the on-disk probe read it back as empty instead of
+    failing to infer its schema."""
+    from stakgraph_spark.query import fulltext_search_on_disk
+    from stakgraph_spark.runner import PipelineRunner
+    from stakgraph_spark.schema import SOURCE_SCHEMA
+
+    workdir = tempfile.mkdtemp(prefix="kg_ft_empty_")
+    try:
+        out = PipelineRunner(spark, workdir, run_id="ft_empty",
+                             fulltext_index=True).run(
+            spark.createDataFrame([], SOURCE_SCHEMA))
+        assert out["fulltext_rebuilt"]
+        metrics = [json.loads(x) for x in open(f"{workdir}/stage_metrics.jsonl")]
+        ft = [m for m in metrics if m["stage"] == "fulltext_index"]
+        assert len(ft) == 1 and ft[0]["distinct_terms"] == 0
+        served = fulltext_search_on_disk(spark, out["fulltext_path"],
+                                         "person db session")
+        assert served.count() == 0
     finally:
         shutil.rmtree(workdir, ignore_errors=True)
 

@@ -12,7 +12,8 @@ locked in below as `absent:` precision items.
 
 import pytest
 
-from harness import GraphIndex, graph_index_for_repo, parse_annotations
+from harness import (GraphIndex, graph_index_for_repo, needs_reference,
+                     parse_annotations)
 
 # suffix (unique within the fixture) -> curated @ast annotations
 ANNOTATIONS = {
@@ -166,6 +167,7 @@ def _verify(gi: GraphIndex):
     return failures, items
 
 
+@needs_reference
 def test_svelte_fixture(svelte_graph):
     nodes, edges = svelte_graph
     gi = graph_index_for_repo(nodes, edges, "fixtures/svelte")

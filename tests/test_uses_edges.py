@@ -4,7 +4,10 @@ Function -USES-> Library (btreemap_graph.rs:421-431; graphs/mod.rs:223-229).
 
 from pyspark.sql import functions as F
 
+from harness import needs_reference
 
+
+@needs_reference
 def test_go_fixture_gorm_uses(spark):
     """db.go calls gorm.Open / imports gorm.io/gorm declared in go.mod ->
     a USES edge into the gorm Library node."""
