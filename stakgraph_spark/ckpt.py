@@ -37,9 +37,9 @@ def release_all() -> int:
 
     Call between benchmark reps.  NOTE (ADVICE r06): a localCheckpoint's
     lineage is truncated, so any still-held DataFrame from a PRIOR build —
-    e.g. a kept GraphResult.nodes — fails on its next action after this
-    (the data is unrecoverable, not recomputable); only call when every
-    stage DataFrame from earlier builds is dead."""
+    both GraphResult tables are checkpoints themselves — fails on its next
+    action after this (the data is unrecoverable, not recomputable); only
+    call when every DataFrame from earlier builds is dead."""
     n = 0
     while _LIVE:
         df = _LIVE.pop()

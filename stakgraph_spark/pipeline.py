@@ -99,27 +99,18 @@ class GraphResult:
 
 
 def _key(df: DataFrame, type_col="node_type") -> DataFrame:
-    verb = F.element_at("meta", "verb")
     return df.withColumn(
         "node_key",
-        F.when(verb.isNotNull(),
-               node_key_col(F.col(type_col), F.col("name"), F.col("file"),
-                            F.col("start"), verb))
-        .otherwise(node_key_col(F.col(type_col), F.col("name"), F.col("file"),
-                                F.col("start"))))
+        node_key_col(F.col(type_col), F.col("name"), F.col("file"),
+                     F.col("start"), F.element_at("meta", "verb")))
 
 
 def _edge_keys(df: DataFrame) -> DataFrame:
     """edge rows with explicit endpoint refs -> key columns."""
     def k(prefix: str):
-        verb = F.col(f"{prefix}_verb")
-        return F.when(
-            verb.isNotNull(),
-            node_key_col(F.col(f"{prefix}_type"), F.col(f"{prefix}_name"),
-                         F.col(f"{prefix}_file"), F.col(f"{prefix}_start"), verb)
-        ).otherwise(
-            node_key_col(F.col(f"{prefix}_type"), F.col(f"{prefix}_name"),
-                         F.col(f"{prefix}_file"), F.col(f"{prefix}_start")))
+        return node_key_col(F.col(f"{prefix}_type"), F.col(f"{prefix}_name"),
+                            F.col(f"{prefix}_file"), F.col(f"{prefix}_start"),
+                            F.col(f"{prefix}_verb"))
     return df.withColumn("src_key", k("src")).withColumn("dst_key", k("dst"))
 
 
@@ -389,12 +380,11 @@ def build_graph(spark: SparkSession, source: DataFrame,
                 raw: DataFrame | None = None) -> GraphResult:
     """source (repo,path,commit,lang,content) -> GraphResult.
 
-    `raw` may be a pre-materialized extraction stream (the resumable runner
-    persists it per (repo, lang) partition and re-feeds it on restart).
+    `raw` may be a pre-extracted stream (the resumable runner persists it
+    per (repo, lang) partition and re-feeds it on restart).
 
-    Every job launched here runs `interpreted`; the returned node table's
-    last join (body restore) runs when the caller reads it, under the
-    caller's settings."""
+    Every job launched here runs `interpreted`.  Both returned tables are
+    materialized and finished: reading them runs no join."""
     # CONCURRENT DRIVER THREADS (guide §2.6): independent jobs and their
     # Catalyst analysis overlap across driver threads throughout the build.
     pool = ThreadPoolExecutor(max_workers=12)
@@ -429,10 +419,7 @@ def _build(spark: SparkSession, source: DataFrame, raw: DataFrame | None,
     # 353, 355 all n=11 at local[8]).  An explicit count is exempt from AQE
     # coalescing; shuffle.partitions is the deployment-sized knob (4x slots
     # in bench, O(100k) on a real cluster at 100 TB).
-    try:
-        n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        n_part = spark.sparkContext.defaultParallelism * 4
+    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     src = src.repartition(n_part, "repo", "lang", "path")
 
     # localCheckpoint: the RAW stream feeds ~10 downstream join families;
@@ -444,14 +431,14 @@ def _build(spark: SparkSession, source: DataFrame, raw: DataFrame | None,
     # from the file plane, so the file/package plane's ~2.5 s of cold
     # Catalyst analysis (measured at 0.09 core-util) overlaps the
     # extraction's execution instead of preceding it on an idle cluster.
-    # The census rides the extraction checkpoint as an Observation (no job
-    # of its own); a raw stream passed in is censused with one aggregate.
-    fut_raw = None
-    if raw is None:
-        obs = Observation()
-        fut_raw = pool.submit(
-            lambda: _ckpt(extract_raw(src.where(F.col("skipped").isNull()))
-                          .observe(obs, Census.column().alias("kinds"))))
+    # A raw stream passed in is checkpointed the same way.  The census rides
+    # the checkpoint as an Observation (no job of its own).
+    obs = Observation()
+    fut_raw = pool.submit(
+        lambda r: _ckpt(
+            (extract_raw(src.where(F.col("skipped").isNull()))
+             if r is None else r)
+            .observe(obs, Census.column().alias("kinds"))), raw)
 
     fp_nodes, fp_edges = file_plane(src)
     # workspace/package detection (monorepos): Package nodes + edges
@@ -462,11 +449,8 @@ def _build(spark: SparkSession, source: DataFrame, raw: DataFrame | None,
     fp_edges = fp_edges.unionByName(_norm_edges(pkg_edges))
     stage("file_plane")
 
-    if fut_raw is not None:
-        raw = fut_raw.result()
-        census = Census.of(obs.get["kinds"])
-    else:
-        census = Census.of(raw.agg(Census.column()).collect()[0][0])
+    raw = fut_raw.result()
+    census = Census.of(obs.get["kinds"])
     stage("raw_extracted")
     skipped: list[str] = []
     metrics.append({"stage": "census", "t": round(time.time() - t0, 3),
@@ -645,9 +629,7 @@ def _build(spark: SparkSession, source: DataFrame, raw: DataFrame | None,
     # ONE shared symbol table feeds the same-file-then-global edge families
     # (3 aggregation stages instead of ~12 per-family ones); eager: every
     # family job reads the materialized RDD instead of recomputing
-    fut_symtab = pool.submit(
-        lambda n: _ckpt(simple_link.build_symtab(n)), nodes)
-    symtab = fut_symtab.result()
+    symtab = _ckpt(simple_link.build_symtab(nodes))
 
     # Families that depend only on nodes/mention/symtab are CONSTRUCTED here,
     # while the cascade's checkpoint jobs still execute on the pool thread:
@@ -852,11 +834,7 @@ def _build(spark: SparkSession, source: DataFrame, raw: DataFrame | None,
     # results, NOT on the edge union, so the prune plane's slim projection
     # over them can materialize CONCURRENTLY with the edge-union checkpoint
     # below and fill that job's straggler tail (VERDICT r05 #1: overlap the
-    # next stage's jobs with the current checkpoint's tail).  The
-    # indirect-test meta merge that used to sit between these filters and
-    # prune is edge-dependent and moved AFTER the prune plane — prune only
-    # removes nodes and never reads the endpoint meta keys it writes, so
-    # the final table is identical.
+    # next stage's jobs with the current checkpoint's tail).
     nodes_final = nodes_no_badinst
     if dropped_endpoints is not None:
         nodes_final = nodes_final.join(dropped_endpoints, "key_h", "left_anti")
@@ -893,40 +871,20 @@ def _build(spark: SparkSession, source: DataFrame, raw: DataFrame | None,
     # indirect integration tests: IntegrationTest -CALLS-> helper whose body
     # issues a Request matching an Endpoint -> the endpoint node gains
     # meta.indirect_test / meta.test_helper (linker.rs:94-131).  Computed
-    # from the pre-prune graph exactly as before; merged into the node
-    # table AFTER the prune plane (see nodes_final comment above) — prune
-    # never reads these keys and only removes nodes, so moving the merge
-    # changes nothing in the output.
-    #
-    # CHECKPOINTED on a pool thread, concurrently with the prune plane's
-    # materializations: the ~10-stage join subtree (tests x calls x fns x
-    # requests x endpoints) used to ride uncomputed inside the final node
-    # table's plan, where its analysis + serial AQE query-stage stepping
-    # ran at count time on an otherwise-idle cluster (event logs: the
-    # post-prune window's zero-task gaps).  The table is tiny (endpoints
-    # that gained an indirect test) and its values are deterministic
-    # (distinct sets + an order-insensitive min_by arg-min), so the
-    # checkpoint cannot perturb the output.
-    # arguments bound at submit time: the main thread rebinds `edges` to
-    # the pruned table below while this job may still be planning
-    fut_ind = None
-    if gate("indirect_tests"):
-        fut_ind = pool.submit(
-            lambda n, e: _ckpt(api_link.indirect_test_endpoints(n, e)),
-            nodes_final, edges)
-
-    # fat-companion body table, same overlap treatment as `ind` (it
-    # depends only on the RAW checkpoint): materializing it during the
-    # prune plane takes its filter/key/dedup subtree out of the final node
-    # plan's count-time AQE stepping.
-    fut_fat = None
+    # from the pre-prune graph (slim carries every column it reads) and
+    # merged into the node table after the prune plane: prune never reads
+    # these keys and only removes nodes, so the merge point changes nothing.
+    slim = fut_slim.result()
+    ind = (api_link.indirect_test_endpoints(slim, edges)
+           if gate("indirect_tests") else None)
+    # fat-companion bodies, one per key_h (the dedup survivor rule above)
+    fat = None
     if gate("fat_bodies"):
-        fat_lazy = (_key(raw.where(F.col("rec") == "fat")
-                         .select("node_type", "name", "file", "start", "body",
-                                 "meta", "repo", "lang"))
-                    .groupBy(F.xxhash64("node_key").alias("key_h"))
-                    .agg(F.min("body").alias("_fat_body")))
-        fut_fat = pool.submit(lambda: _ckpt(fat_lazy))
+        fat = (_key(raw.where(F.col("rec") == "fat")
+                    .select("node_type", "name", "file", "start", "body",
+                            "meta", "repo", "lang"))
+               .groupBy(F.xxhash64("node_key").alias("key_h"))
+               .agg(F.min("body").alias("_fat_body")))
 
     # ---------------- prune plane ----------------
     from . import prune
@@ -938,16 +896,15 @@ def _build(spark: SparkSession, source: DataFrame, raw: DataFrame | None,
                 directives.setdefault(lang, []).append(d)
             else:
                 skipped.append(f"prune.{lang}.{d[0]}")
-    # full=nodes: the final payload materialization filters the PLAIN node
-    # checkpoint by the pruned key set — `keys` already excludes the
-    # instance-filter and endpoint-drop hits (slim was projected from
-    # nodes_final), so re-running those anti-join subtrees inside the final
-    # job would only duplicate work and deepen its plan
-    nodes, edges = prune.prune_graph(nodes_final, edges, pool=pool,
-                                     slim=fut_slim.result(), full=nodes,
-                                     directives=directives)
-    if fut_ind is not None:
-        nodes = (nodes.join(fut_ind.result(), "key_h", "left")
+    # full=nodes: the pruned payload filters the PLAIN node checkpoint by
+    # the pruned key set — `keys` already excludes the instance-filter and
+    # endpoint-drop hits (slim was projected from nodes_final), so
+    # re-running those anti-join subtrees in the final job would only
+    # duplicate work and deepen its plan
+    nodes, edges = prune.prune_graph(nodes_final, edges, slim=slim,
+                                     full=nodes, directives=directives)
+    if ind is not None:
+        nodes = (nodes.join(ind, "key_h", "left")
                  .withColumn(
                      "meta",
                      F.when(F.col("indirect_test").isNotNull(),
@@ -967,16 +924,12 @@ def _build(spark: SparkSession, source: DataFrame, raw: DataFrame | None,
     # bodies are recomputed JVM-side from the source table with one join
     # keyed on (repo, lang, file) (the body_mode=='span' term keeps
     # non-span rows from matching); the rare non-span remainder comes from
-    # the rec='fat' companion rows, one body per key_h
-    # (materialized above, concurrently with the prune plane).
+    # the rec='fat' companion rows.
     src_lines = src.select(
         F.col("repo").alias("_sl_repo"), F.col("lang").alias("_sl_lang"),
         F.col("path").alias("_sl_file"),
         F.split(F.coalesce("content", F.lit("")), "\n").alias("_lines"))
-    # the pruned node table already carries the payload columns (single
-    # node checkpoint); only the fat companions and span text need joins
-    base = (nodes.join(fut_fat.result(), "key_h", "left")
-            if fut_fat is not None
+    base = (nodes.join(fat, "key_h", "left") if fat is not None
             else nodes.withColumn("_fat_body", F.lit(None).cast("string")))
     joined = base.join(
         src_lines,
@@ -1001,6 +954,10 @@ def _build(spark: SparkSession, source: DataFrame, raw: DataFrame | None,
         .select("node_type", "name", "file", "start", "end", "body",
                 "docs", "hash", "data_type", "meta", "repo", "lang",
                 "node_key"))
+    # the finished tables are the build's last two jobs, run concurrently
+    fut_nodes = pool.submit(_ckpt, nodes)
+    fut_edges = pool.submit(_ckpt, edges)
+    nodes, edges = fut_nodes.result(), fut_edges.result()
     stage("pruned")
 
     return GraphResult(nodes=nodes, edges=edges, metrics=metrics)

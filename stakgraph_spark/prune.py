@@ -139,16 +139,15 @@ def prune_orphan_functions(nodes: DataFrame, edges: DataFrame) -> DataFrame:
 
 
 def prune_graph(nodes: DataFrame, edges: DataFrame,
-                pool=None, slim: DataFrame | None = None,
+                slim: DataFrame | None = None,
                 full: DataFrame | None = None,
                 directives: dict | None = None
                 ) -> tuple[DataFrame, DataFrame]:
     """`edges` must arrive deduplicated + materialized with HASHED endpoints
     (the pipeline's union checkpoint applies the BTreeSet semantics of
-    btreemap_graph.rs:51-55); this runs in THREE materialization jobs
-    (keys, nodes, edges) — round 1 ran six, and the per-job planning and
-    scheduling fixed cost dominated the link plane's wall clock at bench
-    scale.
+    btreemap_graph.rs:51-55); this materializes one table, the surviving
+    `keys`, and returns the pruned nodes and edges as lazy frames over it
+    for the caller to finish and materialize.
 
     All removal logic runs over a SLIM projection (no bodies) joined on the
     8-byte key_h surrogate.  The orphan prune and each CLEAN_DIRECTIVES
@@ -188,12 +187,12 @@ def prune_graph(nodes: DataFrame, edges: DataFrame,
     keys = _ckpt(slim.join(reduce(DataFrame.unionByName, drops), "key_h",
                            "left_anti").select("key_h", "node_key"))
     # `keys` already encodes EVERY drop (slim was built from the filtered
-    # node view, then lost every drop set), so the two final
-    # materializations filter the RAW CHECKPOINTED tables by keys alone —
-    # re-running the anti-join subtrees (removed / instance-filter /
-    # endpoint-drop) inside these jobs recomputed each of them a second
-    # time and deepened the plans Catalyst had to re-optimize (measured:
-    # 6.3 s zero-task planning gap entering this pair of jobs).
+    # node view, then lost every drop set), so the returned frames filter
+    # the RAW CHECKPOINTED tables by keys alone — re-running the anti-join
+    # subtrees (removed / instance-filter / endpoint-drop) in the final
+    # jobs recomputed each of them a second time and deepened the plans
+    # Catalyst had to re-optimize (measured: 6.3 s zero-task planning gap
+    # entering the final jobs).
     payload = full if full is not None else nodes
     nodes = payload.join(keys.select("key_h"), "key_h", "leftsemi")
 
@@ -210,9 +209,4 @@ def prune_graph(nodes: DataFrame, edges: DataFrame,
              .join(keys.select(F.col("key_h").alias("dst_h"),
                                F.col("node_key").alias("dst_key")), "dst_h")
              .select(*EDGE_COLS))
-    if pool is not None:
-        # the two final materializations are independent — overlap them
-        fn = pool.submit(lambda: _ckpt(nodes))
-        fe = pool.submit(lambda: _ckpt(edges))
-        return fn.result(), fe.result()
-    return (_ckpt(nodes), _ckpt(edges))
+    return nodes, edges

@@ -133,7 +133,6 @@ class PipelineRunner:
 
     # ---------------- stages ----------------
     def run(self, source: DataFrame) -> dict:
-        from .ckpt import ckpt
         from .extract import extract_raw
         from .pipeline import build_graph, interpreted
         from .source import with_skip_flags
@@ -213,10 +212,10 @@ class PipelineRunner:
                 or not os.path.exists(os.path.join(nodes_path, "_SUCCESS")):
             # keep only raw rows for partitions present in this source
             raw = raw.join(parts, ["repo", "lang"], "leftsemi")
-            # the raw checkpoint and the graph writes are jobs of the same
-            # build: interpreted like the ones inside build_graph
+            # the graph writes are jobs of the same build: interpreted like
+            # the ones inside build_graph
             with interpreted(self.spark):
-                g = build_graph(self.spark, source, raw=ckpt(raw))
+                g = build_graph(self.spark, source, raw=raw)
                 (g.nodes.write.mode("overwrite").partitionBy("repo", "lang")
                  .parquet(nodes_path))
                 (g.edges.write.mode("overwrite").partitionBy("repo", "lang")

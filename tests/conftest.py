@@ -10,6 +10,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def spark():
     from pyspark.sql import SparkSession
 
+    from perfbench.harness import driver_mem_gb
+
     s = (SparkSession.builder.master("local[*]")
          .appName("stakgraph-spark-tests")
          .config("spark.sql.shuffle.partitions", "8")
@@ -19,7 +21,8 @@ def spark():
          # bench.py make_spark) — tests must exercise the shipped config
          .config("spark.sql.constraintPropagation.enabled", "false")
          .config("spark.ui.enabled", "false")
-         .config("spark.driver.memory", "16g")
+         # the benchmark's rule: a third of RAM, capped
+         .config("spark.driver.memory", f"{driver_mem_gb()}g")
          .getOrCreate())
     yield s
     s.stop()

@@ -31,7 +31,7 @@ def _compiled(spark) -> int:
 @pytest.fixture(scope="module")
 def interpreted_build(spark):
     """One build of the 3-language source: (classes compiled inside
-    build_graph, graph digest, build metrics)."""
+    build_graph, graph digest, build metrics, the GraphResult)."""
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
@@ -61,12 +61,22 @@ def interpreted_build(spark):
     before = _compiled(spark)
     g = build_graph(spark, src)
     compiled = _compiled(spark) - before
-    return compiled, graph_digest(g.nodes, g.edges), g.metrics
+    return compiled, graph_digest(g.nodes, g.edges), g.metrics, g
 
 
 def test_build_compiles_no_code(interpreted_build):
     compiled = interpreted_build[0]
     assert compiled == 0, f"{compiled} classes compiled inside build_graph"
+
+
+def test_build_returns_finished_tables(interpreted_build):
+    """Both returned tables are materialized inside the build: reading
+    them runs no join and no shuffle, so no job of the graph runs under
+    the caller's settings."""
+    g = interpreted_build[3]
+    for df in (g.nodes, g.edges):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "Join" not in plan and "Exchange" not in plan, plan
 
 
 def test_interpreted_graph_identical(spark, interpreted_build, monkeypatch):
@@ -301,10 +311,21 @@ def test_surrogate_collision_guard(spark, monkeypatch):
     """STAKGRAPH_CHECK_SURROGATES=1 runs the build-time collision assertion
     (countDistinct(key_h) == count of deduped node_keys) so a corpus large
     enough to collide the 64-bit surrogates fails loudly instead of
-    silently merging nodes.  On this source the guard must pass; the
-    negative path is the raise in pipeline._build."""
+    silently merging nodes.  On this source the guard must pass."""
     from stakgraph_spark.pipeline import build_graph
 
     monkeypatch.setenv("STAKGRAPH_CHECK_SURROGATES", "1")
     g = build_graph(spark, _source(spark))
     assert g.nodes.count() > 0
+
+
+def test_surrogate_collision_guard_fails(spark, monkeypatch):
+    """With every node key hashed onto one surrogate the guard raises."""
+    from pyspark.sql import functions as F
+
+    from stakgraph_spark.pipeline import build_graph
+
+    monkeypatch.setenv("STAKGRAPH_CHECK_SURROGATES", "1")
+    monkeypatch.setattr(F, "xxhash64", lambda *cols: F.lit(0).cast("long"))
+    with pytest.raises(AssertionError, match="surrogate collision"):
+        build_graph(spark, _source(spark))

@@ -42,6 +42,31 @@ SOURCE = [
 ]
 LANG = {"py": "python", "go": "go", "ts": "typescript"}
 
+# integration test -> helper -> Request -> Endpoint, plus a manifest line
+# whose trailing blank makes its Library body differ from the line's span
+# (a fat companion row): this source's census opens the indirect-test and
+# fat-body gates, so both joins reach the final node plan
+INDIRECT_SOURCE = [
+    ("app.py",
+     "from fastapi import FastAPI\n"
+     "app = FastAPI()\n"
+     "\n"
+     '@app.get("/widgets")\n'
+     "def list_widgets():\n"
+     "    return []\n"),
+    ("helpers.py",
+     "import requests\n"
+     "\n"
+     "def fetch_widgets():\n"
+     '    return requests.get("/widgets")\n'),
+    ("tests/integration/test_api.py",
+     "from helpers import fetch_widgets\n"
+     "\n"
+     "def test_widgets_via_helper():\n"
+     "    assert fetch_widgets() is not None\n"),
+    ("requirements.txt", "fastapi==0.110.0 \nrequests==2.32.3\n"),
+]
+
 
 def _plan_lines(df) -> int:
     return len(df._jdf.queryExecution().analyzed().treeString().splitlines())
@@ -63,14 +88,17 @@ def plan_log(monkeypatch):
     return log
 
 
-def test_build_graph_plans_bounded(spark, plan_log):
+def _build(spark, rows, lang=None):
     from stakgraph_spark.pipeline import build_graph
     from stakgraph_spark.schema import SOURCE_SCHEMA
 
-    src = spark.createDataFrame(
-        [("plans", p, "c0", LANG[p.rsplit(".", 1)[1]], c) for p, c in SOURCE],
-        SOURCE_SCHEMA)
-    g = build_graph(spark, src)
+    return build_graph(spark, spark.createDataFrame(
+        [("plans", p, "c0", lang or LANG[p.rsplit(".", 1)[1]], c)
+         for p, c in rows], SOURCE_SCHEMA))
+
+
+def test_build_graph_plans_bounded(spark, plan_log):
+    g = _build(spark, SOURCE)
     eps = {r["name"] for r in
            g.nodes.where(g.nodes.node_type == "Endpoint").collect()}
     # the app.use prefix fact exists, so the endpoint-group rename ran
@@ -80,6 +108,19 @@ def test_build_graph_plans_bounded(spark, plan_log):
     # fat-body and indirect-test tables, and its 8 edge families fill two
     # sub-union groups, which leaves 14 materializations
     assert len(plan_log) >= 14, plan_log
+    assert max(plan_log) <= PLAN_BOUND, sorted(plan_log)
+
+    # here the finished node table's plan holds the indirect-test and
+    # fat-body joins with their subtrees
+    del plan_log[:]
+    g = _build(spark, INDIRECT_SOURCE, lang="python")
+    census = next(m for m in g.metrics if m["stage"] == "census")
+    assert not {"indirect_tests", "fat_bodies"} & set(census["skipped"])
+    (ep,) = g.nodes.where(g.nodes.node_type == "Endpoint").collect()
+    assert ep["meta"]["indirect_test"] == "test_widgets_via_helper", ep
+    # 13 materializations: both gates add joins to the finished node
+    # table, not tables of their own
+    assert len(plan_log) >= 13, plan_log
     assert max(plan_log) <= PLAN_BOUND, sorted(plan_log)
 
 
