@@ -226,23 +226,21 @@ def indirect_test_endpoints(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     gains meta.indirect_test / meta.test_helper (linker.rs:94-131; the
     reference mutates the endpoint node, it does not add an edge).
 
-    Returns (key_h, indirect_test, test_helper) for the meta merge —
-    identity here is the 8-byte key_h surrogate (pipeline.EDGE_COLS_H):
-    this runs inside the link plane, where edges carry hashed endpoints."""
+    Returns (node_key, indirect_test, test_helper) for the meta merge."""
     keyed = nodes.select(
-        "key_h", "node_type", "repo", "lang", "name", "file", "start",
+        "node_key", "node_type", "repo", "lang", "name", "file", "start",
         "end", F.element_at("meta", "verb").alias("verb"))
     tests = keyed.where(F.col("node_type") == "IntegrationTest").select(
-        F.col("key_h").alias("t_key"), F.col("name").alias("t_name"))
+        F.col("node_key").alias("t_key"), F.col("name").alias("t_name"))
     fns = keyed.where(F.col("node_type") == "Function").select(
-        F.col("key_h").alias("h_key"), F.col("name").alias("h_name"),
+        F.col("node_key").alias("h_key"), F.col("name").alias("h_name"),
         F.col("repo").alias("h_repo"), F.col("file").alias("h_file"),
         F.col("start").alias("h_start"), F.col("end").alias("h_end"))
     calls = edges.where(F.col("edge_type") == "Calls")
 
     def _calls(i):
-        return calls.select(F.col("src_h").alias(f"c{i}_src"),
-                            F.col("dst_h").alias(f"c{i}_dst"))
+        return calls.select(F.col("src_key").alias(f"c{i}_src"),
+                            F.col("dst_key").alias(f"c{i}_dst"))
 
     h1 = (tests.join(_calls(1), tests["t_key"] == F.col("c1_src"))
           .join(fns, F.col("c1_dst") == fns["h_key"])
@@ -257,7 +255,7 @@ def indirect_test_endpoints(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     helpers = h1.unionByName(h2).distinct()
 
     reqs = keyed.where(F.col("node_type") == "Request").select(
-        F.col("key_h").alias("r_key"), F.col("name").alias("r_name"),
+        F.col("node_key").alias("r_key"), F.col("name").alias("r_name"),
         F.col("repo").alias("r_repo"), F.col("file").alias("r_file"),
         F.col("start").alias("r_start"), F.col("verb").alias("r_verb"))
     # request belongs to helper: explicit Calls edge OR spatial containment
@@ -274,7 +272,7 @@ def indirect_test_endpoints(nodes: DataFrame, edges: DataFrame) -> DataFrame:
              .where(F.col("npath").isNotNull() & F.col("r_verb").isNotNull()))
 
     eps = (keyed.where(F.col("node_type") == "Endpoint")
-           .select("key_h", F.col("repo").alias("h_repo"),
+           .select("node_key", F.col("repo").alias("h_repo"),
                    normalize_backend(F.col("name")).alias("npath"),
                    F.upper("verb").alias("e_verb")))
     hits = hreqs.join(
@@ -283,8 +281,8 @@ def indirect_test_endpoints(nodes: DataFrame, edges: DataFrame) -> DataFrame:
         & (F.upper(hreqs["r_verb"]) == eps["e_verb"]))
     # pick BOTH names from one matched row (independent mins could name a
     # (test, helper) pair that never co-occurred)
-    return (hits.groupBy("key_h")
+    return (hits.groupBy("node_key")
             .agg(F.min_by(F.struct("t_name", "h_name"),
                           F.struct("t_name", "h_name")).alias("p"))
-            .select("key_h", F.col("p.t_name").alias("indirect_test"),
+            .select("node_key", F.col("p.t_name").alias("indirect_test"),
                     F.col("p.h_name").alias("test_helper")))

@@ -40,13 +40,10 @@ KEY = ["repo", "lang"]
 
 def _fn_base(functions: DataFrame) -> DataFrame:
     """Symbol-table base: one row per Function node with resolution columns.
-    The slim link-plane node table carries a has_body flag instead of the
-    (byte-heavy) body column."""
-    nonempty = (F.col("has_body") if "has_body" in functions.columns
-                else F.length(F.coalesce(F.col("body"), F.lit(""))) > 0)
+    The node checkpoint's has_body flag is the nonempty-body rule."""
     return functions.select(
         "repo", "lang", "name", "file", "start",
-        nonempty.alias("nonempty"),
+        F.col("has_body").alias("nonempty"),
         F.col("file").contains("mock").alias("is_mock"),
         F.regexp_replace("file", "/[^/]*$", "").alias("dir"),
         F.element_at(F.col("meta"), "operand").alias("m_operand"),
@@ -103,8 +100,8 @@ def resolve_calls(mentions: DataFrame, functions: DataFrame,
                   imports_map: DataFrame,
                   struct_fields: DataFrame | None = None,
                   trait_impls: DataFrame | None = None) -> DataFrame:
-    """mentions: (repo,lang,src_type,src_name,src_file,src_start,called,operand
-    [,rcv_type,rcv_base,rcv_field,skipflag])
+    """mentions: (repo,lang,src_type,src_name,src_file,src_start,called,operand,
+    rcv_type,rcv_base,rcv_field,rcv_call,skipflag)
     -> resolved (…, dst_file, dst_start, confidence, strategy).
 
     rcv_* columns are the hybrid-registry receiver facts (strategy 0,
@@ -118,9 +115,6 @@ def resolve_calls(mentions: DataFrame, functions: DataFrame,
 
     Returns (resolved, unresolved): the unresolved remainder feeds the USES
     edge family (library-call linking, btreemap_graph.rs:421-431)."""
-    for c in ("rcv_type", "rcv_base", "rcv_field", "rcv_call", "skipflag"):
-        if c not in mentions.columns:
-            mentions = mentions.withColumn(c, F.lit(None).cast("string"))
     # the symbol-table base feeds ~6 aggregate views per cascade instance;
     # checkpointing it keeps every downstream join plan shallow
     fns = _ckpt(_fn_base(functions), eager=False)

@@ -17,7 +17,6 @@ in plane 2 and every cross-file step is a join in plane 3.
 
 from __future__ import annotations
 
-import os
 import time
 from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager
@@ -27,6 +26,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from .ckpt import ckpt as _ckpt
 from .extract import extract_raw
 from .keys import node_key_col
 from .langspec import LANGS
@@ -38,23 +38,6 @@ from .source import with_skip_flags
 
 EDGE_COLS = ["src_key", "dst_key", "edge_type", "operand", "confidence",
              "strategy", "repo", "lang"]
-
-# Internal (link/prune plane) edge schema: endpoints are 8-byte xxhash64
-# surrogates of the canonical string keys.  The <=5000-char key strings were
-# the dominant shuffle payload of every edge dedup / prune join (measured:
-# link-plane stages scaled 1.7-2.1x of the 3.9x compute ceiling at 252k
-# files, random-gather memory traffic being the contended resource —
-# VERDICT r04 #1); hashing them off the edge rows cuts each edge's key bytes
-# from ~120-300 to 16.  Strings are re-attached from the node table exactly
-# once, at prune-time materialization.  Collision math: 64-bit keys are safe
-# to ~10^8 nodes per build (p < 1e-3); a 10^10-node corpus would widen the
-# surrogate to 128 bits (two xxhash64 calls with distinct seeds) — the
-# schema change is one column.
-EDGE_COLS_H = ["src_h", "dst_h", "edge_type", "operand", "confidence",
-               "strategy", "repo", "lang"]
-
-
-from .ckpt import ckpt as _ckpt
 
 _CODEGEN_MODE = "spark.sql.codegen.factoryMode"
 
@@ -121,20 +104,6 @@ def _norm_edges(df: DataFrame) -> DataFrame:
     return df.select(*EDGE_COLS)
 
 
-def _norm_edges_h(df: DataFrame) -> DataFrame:
-    """Edge family -> internal hashed-endpoint schema (EDGE_COLS_H).
-
-    Every family computes src_key/dst_key as unevaluated projections
-    (node_key_col expressions), so the optimizer folds the xxhash64 here
-    into the projection that produces the edge row — the key STRING exists
-    only transiently inside that stage and never enters a shuffle file."""
-    df = _norm_edges(df)
-    return df.select(
-        F.xxhash64("src_key").alias("src_h"),
-        F.xxhash64("dst_key").alias("dst_h"),
-        "edge_type", "operand", "confidence", "strategy", "repo", "lang")
-
-
 # Dedup survivors.  The reference keeps one node per canonical key and one
 # edge per (src, dst, type) in a BTreeMap/BTreeSet (btreemap_graph.rs:51-55),
 # so its graph depends on the input only.  A key here can arrive more than
@@ -146,7 +115,7 @@ def _norm_edges_h(df: DataFrame) -> DataFrame:
 #               sorted entries (a map is not orderable)
 #   edges       highest confidence, null lowest; then least
 #               (strategy, operand, repo, lang)
-#   fat bodies  least body per key_h
+#   fat bodies  least body per node_key
 # Every column is in its order, so rows tie only when they are identical.
 
 
@@ -162,8 +131,8 @@ def _node_survivors(nodes: DataFrame) -> DataFrame:
 def _edge_survivors(edges: DataFrame) -> DataFrame:
     order = F.struct(F.col("confidence").isNull(), -F.col("confidence"),
                      "strategy", "operand", "repo", "lang")
-    return (edges.groupBy("src_h", "dst_h", "edge_type")
-            .agg(F.min_by(F.struct(*EDGE_COLS_H), order).alias("e"))
+    return (edges.groupBy("src_key", "dst_key", "edge_type")
+            .agg(F.min_by(F.struct(*EDGE_COLS), order).alias("e"))
             .select("e.*"))
 
 
@@ -520,23 +489,9 @@ def _build(spark: SparkSession, source: DataFrame, raw: DataFrame | None,
     # core at high parallelism (measured 26% idle at the pinned 8-core
     # scaling leg).  The cascade's nonempty-body rule rides has_body.
     nodes = _ckpt(_node_survivors(nodes)
-                  .withColumn("key_h", F.xxhash64("node_key"))
                   .withColumn("has_body",
                               (F.length(F.coalesce("body", F.lit(""))) > 0)
                               | F.col("body_mode").isNotNull()))
-    if os.environ.get("STAKGRAPH_CHECK_SURROGATES"):
-        # debug-flagged guard for the 64-bit surrogate collision math
-        # (EDGE_COLS_H comment above): node_key is unique post-dedup, so a
-        # key_h collision means two distinct nodes would silently merge in
-        # every link/prune join.  One cheap agg over the just-checkpointed
-        # table; a 10^9-node run fails loudly instead (VERDICT r05 #7).
-        c = nodes.agg(F.count("*").alias("n"),
-                      F.countDistinct("key_h").alias("h")).collect()[0]
-        if c["n"] != c["h"]:
-            raise AssertionError(
-                f"xxhash64 surrogate collision: {c['n']} distinct node_keys "
-                f"-> {c['h']} distinct key_h; widen the surrogate to 128 "
-                "bits (see EDGE_COLS_H collision math)")
     stage("nodes_assembled")
 
     # File -CONTAINS-> extracted node (add_node_with_parent semantics)
@@ -656,8 +611,8 @@ def _build(spark: SparkSession, source: DataFrame, raw: DataFrame | None,
                                  & F.col("lang").isin(*INSTANCE_FILTER_LANGS))
                      .join(class_names, ["repo", "lang", "data_type"],
                            "left_anti")
-                     .select("key_h"))
-        nodes_no_badinst = nodes.join(inst_drop, "key_h", "left_anti")
+                     .select("node_key"))
+        nodes_no_badinst = nodes.join(inst_drop, "node_key", "left_anti")
 
     impl_edges = None
     if gate("implements"):
@@ -811,17 +766,14 @@ def _build(spark: SparkSession, source: DataFrame, raw: DataFrame | None,
     if py_handler_edges is not None:
         handler_edges = _norm_edges(py_handler_edges).unionByName(
             handler_edges)
-    resolved_eps = hres.select(
-        F.xxhash64(
-            node_key_col(F.col("src_type"), F.col("src_name"), F.col("src_file"),
-                         F.col("src_start"), F.col("src_verb"))).alias("key_h")
-    ).distinct()
-    all_cascade_eps = hm_cascade.where(~F.col("lang").isin(KEEP_ON_MISS)).select(
-        F.xxhash64(
-            node_key_col(F.col("src_type"), F.col("src_name"), F.col("src_file"),
-                         F.col("src_start"), F.col("src_verb"))).alias("key_h")
-    ).distinct()
-    dropped_endpoints = all_cascade_eps.join(resolved_eps, "key_h", "left_anti")
+
+    def endpoint_keys(df: DataFrame) -> DataFrame:
+        return df.select(node_key_col(
+            F.col("src_type"), F.col("src_name"), F.col("src_file"),
+            F.col("src_start"), F.col("src_verb")).alias("node_key")).distinct()
+    dropped_endpoints = endpoint_keys(
+        hm_cascade.where(~F.col("lang").isin(KEEP_ON_MISS))).join(
+        endpoint_keys(hres), "node_key", "left_anti")
 
     uses_edges = None
     if gate("uses"):
@@ -835,10 +787,9 @@ def _build(spark: SparkSession, source: DataFrame, raw: DataFrame | None,
     # over them can materialize CONCURRENTLY with the edge-union checkpoint
     # below and fill that job's straggler tail (VERDICT r05 #1: overlap the
     # next stage's jobs with the current checkpoint's tail).
-    nodes_final = nodes_no_badinst
-    if dropped_endpoints is not None:
-        nodes_final = nodes_final.join(dropped_endpoints, "key_h", "left_anti")
-    SLIM_COLS = ["key_h", "node_key", "node_type", "repo", "lang",
+    nodes_final = nodes_no_badinst.join(dropped_endpoints, "node_key",
+                                        "left_anti")
+    SLIM_COLS = ["node_key", "node_type", "repo", "lang",
                  "name", "file", "start", "end", "meta"]
     fut_slim = pool.submit(lambda: _ckpt(nodes_final.select(*SLIM_COLS)))
 
@@ -857,14 +808,12 @@ def _build(spark: SparkSession, source: DataFrame, raw: DataFrame | None,
     groups = [fams[i:i + 5] for i in range(0, len(fams), 5)]
 
     def _sub(g):
-        return _ckpt(reduce(DataFrame.unionByName, map(_norm_edges_h, g)))
+        return _ckpt(reduce(DataFrame.unionByName, map(_norm_edges, g)))
 
     futs = [pool.submit(_sub, g) for g in groups]
     edges = reduce(DataFrame.unionByName, [f.result() for f in futs])
     # BTreeSet edge dedup (btreemap_graph.rs:51-55) over the materialized
-    # family RDDs — one shuffle, shallow plan.  Dedup key is the surrogate
-    # pair: a false merge needs two distinct edges colliding on BOTH 64-bit
-    # endpoint hashes with the same edge_type (p ~ 1e-20 at 10^9 edges).
+    # family RDDs — one shuffle, shallow plan.
     edges = _ckpt(_edge_survivors(edges))
     stage("edges_linked")
 
@@ -877,13 +826,13 @@ def _build(spark: SparkSession, source: DataFrame, raw: DataFrame | None,
     slim = fut_slim.result()
     ind = (api_link.indirect_test_endpoints(slim, edges)
            if gate("indirect_tests") else None)
-    # fat-companion bodies, one per key_h (the dedup survivor rule above)
+    # fat-companion bodies, one per node_key (the dedup survivor rule above)
     fat = None
     if gate("fat_bodies"):
         fat = (_key(raw.where(F.col("rec") == "fat")
                     .select("node_type", "name", "file", "start", "body",
                             "meta", "repo", "lang"))
-               .groupBy(F.xxhash64("node_key").alias("key_h"))
+               .groupBy("node_key")
                .agg(F.min("body").alias("_fat_body")))
 
     # ---------------- prune plane ----------------
@@ -896,15 +845,14 @@ def _build(spark: SparkSession, source: DataFrame, raw: DataFrame | None,
                 directives.setdefault(lang, []).append(d)
             else:
                 skipped.append(f"prune.{lang}.{d[0]}")
-    # full=nodes: the pruned payload filters the PLAIN node checkpoint by
+    # the pruned payload filters the PLAIN node checkpoint (`nodes`) by
     # the pruned key set — `keys` already excludes the instance-filter and
     # endpoint-drop hits (slim was projected from nodes_final), so
     # re-running those anti-join subtrees in the final job would only
     # duplicate work and deepen its plan
-    nodes, edges = prune.prune_graph(nodes_final, edges, slim=slim,
-                                     full=nodes, directives=directives)
+    nodes, edges = prune.prune_graph(slim, edges, nodes, directives)
     if ind is not None:
-        nodes = (nodes.join(ind, "key_h", "left")
+        nodes = (nodes.join(ind, "node_key", "left")
                  .withColumn(
                      "meta",
                      F.when(F.col("indirect_test").isNotNull(),
@@ -929,7 +877,7 @@ def _build(spark: SparkSession, source: DataFrame, raw: DataFrame | None,
         F.col("repo").alias("_sl_repo"), F.col("lang").alias("_sl_lang"),
         F.col("path").alias("_sl_file"),
         F.split(F.coalesce("content", F.lit("")), "\n").alias("_lines"))
-    base = (nodes.join(fat, "key_h", "left") if fat is not None
+    base = (nodes.join(fat, "node_key", "left") if fat is not None
             else nodes.withColumn("_fat_body", F.lit(None).cast("string")))
     joined = base.join(
         src_lines,

@@ -2,12 +2,8 @@
 
 All anti-joins; key-level semantics mirror btreemap_graph.rs exactly.
 
-Node identity inside this plane is `key_h` — the 8-byte xxhash64 surrogate
-of the canonical node key (pipeline.EDGE_COLS_H rationale: the <=5000-char
-key strings were the dominant shuffle payload of every prune join at scale).
-Edges arrive with hashed endpoints (src_h, dst_h); the canonical STRINGS are
-re-attached exactly once, by the final dangling-endpoint joins — which this
-plane needs anyway, so the re-attachment costs zero extra shuffles.
+Node identity inside this plane is the canonical node key (`node_key` on
+nodes, `src_key` / `dst_key` on edges), as everywhere else in the graph.
 """
 
 from __future__ import annotations
@@ -39,39 +35,39 @@ CLEAN_DIRECTIVES: dict[str, list[tuple[str, ...]]] = {
 def dedup_datamodels_vs_classes(nodes: DataFrame, edges: DataFrame,
                                 removed: DataFrame, lang: str,
                                 remove_t: str, keep_t: str) -> DataFrame:
-    """key_h of each <remove_t> for which a <keep_t> with the same (name,
+    """node_key of each <remove_t> for which a <keep_t> with the same (name,
     file) has OPERAND edges (btreemap_graph.rs:718-754).  The reference's
     remove_node drops a node's edges with it, so an Operand edge whose dst
     Function is in `removed` (orphan-pruned) is no keeper evidence."""
     operand_srcs = (edges.where(F.col("edge_type") == "Operand")
-                    .join(removed.withColumnRenamed("key_h", "dst_h"),
-                          "dst_h", "left_anti")
-                    .select(F.col("src_h")).distinct())
+                    .join(removed.withColumnRenamed("node_key", "dst_key"),
+                          "dst_key", "left_anti")
+                    .select(F.col("src_key")).distinct())
     keepers = (nodes.where((F.col("node_type") == keep_t) & (F.col("lang") == lang))
                .join(operand_srcs,
-                     nodes["key_h"] == operand_srcs["src_h"], "leftsemi")
+                     nodes["node_key"] == operand_srcs["src_key"], "leftsemi")
                .select("repo", "lang", "name", "file").distinct())
     dms = nodes.where((F.col("node_type") == remove_t) & (F.col("lang") == lang))
     return dms.join(keepers, ["repo", "lang", "name", "file"],
-                    "leftsemi").select("key_h")
+                    "leftsemi").select("node_key")
 
 
 def filter_parents_without_children(nodes: DataFrame, removed: DataFrame,
                                     lang: str, parent_t: str, child_t: str,
                                     meta_key: str) -> DataFrame:
-    """key_h of each <parent_t> whose name never appears as the
+    """node_key of each <parent_t> whose name never appears as the
     meta[<meta_key>] of a <child_t> outside `removed`
     (btreemap_graph.rs:664-706; name-only matching)."""
     child_names = (nodes.where((F.col("node_type") == child_t)
                                & (F.col("lang") == lang))
-                   .join(removed, "key_h", "left_anti")
+                   .join(removed, "node_key", "left_anti")
                    .select("repo", "lang",
                            F.element_at("meta", meta_key).alias("name"))
                    .where(F.col("name").isNotNull()).distinct())
     parents = nodes.where((F.col("node_type") == parent_t)
                           & (F.col("lang") == lang))
     return parents.join(child_names, ["repo", "lang", "name"],
-                        "left_anti").select("key_h")
+                        "left_anti").select("node_key")
 
 
 def prune_orphan_functions(nodes: DataFrame, edges: DataFrame) -> DataFrame:
@@ -82,25 +78,23 @@ def prune_orphan_functions(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     C. var-nested functions in test files (unconditional)
     """
     funcs = nodes.where(F.col("node_type") == "Function") \
-                 .select("key_h", "repo", "lang", "file", "start", "end")
-    func_keys = funcs.select("key_h")
+                 .select("node_key", "repo", "lang", "file", "start", "end")
+    func_keys = funcs.select("node_key")
 
     nested = edges.where(F.col("edge_type") == "NestedIn")
     # NestedIn src must be a Function
-    nested = nested.join(func_keys.withColumnRenamed("key_h", "src_h"),
-                         "src_h", "leftsemi")
+    nested = nested.join(func_keys.withColumnRenamed("node_key", "src_key"),
+                         "src_key", "leftsemi")
     nested_in_func = nested.join(
-        func_keys.withColumnRenamed("key_h", "dst_h"), "dst_h", "leftsemi") \
-        .select("src_h").distinct()
-    # var parents: the string plane tested dst_key.startswith('var-'), i.e.
-    # dst node_type == Var — expressed on surrogates as a semijoin against
-    # the Var nodes' hashes
+        func_keys.withColumnRenamed("node_key", "dst_key"), "dst_key",
+        "leftsemi").select("src_key").distinct()
+    # var parents: the dst node_type is Var
     var_keys = (nodes.where(F.col("node_type") == "Var")
-                .select(F.col("key_h").alias("dst_h")))
-    nested_in_var = nested.join(var_keys, "dst_h", "leftsemi") \
-        .select("src_h").distinct()
+                .select(F.col("node_key").alias("dst_key")))
+    nested_in_var = nested.join(var_keys, "dst_key", "leftsemi") \
+        .select("src_key").distinct()
     # A-candidates: nested-in-function minus those whose parent is a var
-    a_cand = nested_in_func.join(nested_in_var, "src_h", "left_anti") \
+    a_cand = nested_in_func.join(nested_in_var, "src_key", "left_anti") \
                            .unionByName(nested_in_var).distinct()
 
     # B: functions inside test spans (same file, start>=ts, end<=te)
@@ -112,7 +106,7 @@ def prune_orphan_functions(nodes: DataFrame, edges: DataFrame) -> DataFrame:
                .where((F.col("file") == F.col("t_file"))
                       & (F.col("start") >= F.col("ts"))
                       & (F.col("end") <= F.col("te")))
-               .select(F.col("key_h").alias("src_h")).distinct())
+               .select(F.col("node_key").alias("src_key")).distinct())
 
     # C: var-nested functions living in test files
     test_file = (F.col("file").rlike(r"(^|/)tests?(/|$)")
@@ -120,61 +114,42 @@ def prune_orphan_functions(nodes: DataFrame, edges: DataFrame) -> DataFrame:
                  | F.col("file").rlike(r"\.(test|spec)\.[a-z]+$"))
     var_nested_testfile = (nested_in_var
                            .join(funcs.where(test_file)
-                                 .select(F.col("key_h").alias("src_h")),
-                                 "src_h", "leftsemi"))
+                                 .select(F.col("node_key").alias("src_key")),
+                                 "src_key", "leftsemi"))
 
-    a_cand = a_cand.join(in_test, "src_h", "left_anti") \
-                   .join(var_nested_testfile, "src_h", "left_anti")
+    a_cand = a_cand.join(in_test, "src_key", "left_anti") \
+                   .join(var_nested_testfile, "src_key", "left_anti")
 
     has_incoming = (edges.where(F.col("edge_type").isin("Handler", "Calls", "Renders"))
-                    .select(F.col("dst_h").alias("src_h")).distinct())
+                    .select(F.col("dst_key").alias("src_key")).distinct())
     has_outgoing = (edges.where(F.col("edge_type").isin("Calls", "Handler"))
-                    .select("src_h").distinct())
-    a_remove = a_cand.join(has_incoming, "src_h", "left_anti") \
-                     .join(has_outgoing, "src_h", "left_anti")
+                    .select("src_key").distinct())
+    a_remove = a_cand.join(has_incoming, "src_key", "left_anti") \
+                     .join(has_outgoing, "src_key", "left_anti")
 
     remove = a_remove.unionByName(in_test).unionByName(var_nested_testfile) \
-                     .distinct().withColumnRenamed("src_h", "key_h")
+                     .distinct().withColumnRenamed("src_key", "node_key")
     return remove
 
 
-def prune_graph(nodes: DataFrame, edges: DataFrame,
-                slim: DataFrame | None = None,
-                full: DataFrame | None = None,
-                directives: dict | None = None
-                ) -> tuple[DataFrame, DataFrame]:
-    """`edges` must arrive deduplicated + materialized with HASHED endpoints
-    (the pipeline's union checkpoint applies the BTreeSet semantics of
-    btreemap_graph.rs:51-55); this materializes one table, the surviving
-    `keys`, and returns the pruned nodes and edges as lazy frames over it
-    for the caller to finish and materialize.
+def prune_graph(slim: DataFrame, edges: DataFrame, full: DataFrame,
+                directives: dict) -> tuple[DataFrame, DataFrame]:
+    """`slim` is the materialized node view the removal logic reads (no
+    bodies); `edges` must arrive deduplicated + materialized (the
+    pipeline's union checkpoint applies the BTreeSet semantics of
+    btreemap_graph.rs:51-55); `full` is a node table whose node_key set
+    contains slim's; `directives` is the subset of CLEAN_DIRECTIVES whose
+    node types the input has (the pipeline drops an entry whose drop set
+    would be empty).  This materializes one table, the surviving `keys`,
+    and returns `full` and `edges` filtered by it as lazy frames for the
+    caller to finish and materialize.
 
-    All removal logic runs over a SLIM projection (no bodies) joined on the
-    8-byte key_h surrogate.  The orphan prune and each CLEAN_DIRECTIVES
-    entry yield a drop set read from slim; `keys` is slim minus their
-    union, so each directive adds one subtree to the plan.  `directives`
-    (default CLEAN_DIRECTIVES) is the subset whose node types the input
-    has: the pipeline drops an entry whose drop set would be empty.
-    Edges touching removed nodes are dropped solely by the final endpoint
-    joins — INNER joins against (key_h, node_key) that both drop dangling
-    edges and swap the surrogates back to canonical key strings: the
-    returned edge table is the public EDGE_COLS shape, surrogate-free."""
-    # slim IS checkpointed: the incoming nodes plan carries the endpoint-drop
-    # anti-join over the call cascade, and prune_orphan + the directives read
-    # slim ~8 times — uncheckpointed, each read replays the cascade.
-    # node_key rides along (strings re-attach to edges from `keys` below).
-    # The pipeline normally passes slim in pre-materialized — submitted
-    # concurrently with the edge-union checkpoint so it fills that job's
-    # straggler tail (it has no edge dependency).
-    if slim is None:
-        slim = _ckpt(nodes.select("key_h", "node_key", "node_type", "repo",
-                                  "lang", "name", "file", "start", "end",
-                                  "meta"))
-
+    The orphan prune and each directive yield a drop set read from slim;
+    `keys` is slim minus their union, so each directive adds one subtree to
+    the plan.  Edges touching removed nodes are dropped solely by the final
+    endpoint semi-joins against `keys`."""
     removed = prune_orphan_functions(slim, edges)
     drops = [removed]
-    if directives is None:
-        directives = CLEAN_DIRECTIVES
     for lang, entries in directives.items():
         for kind, *args in entries:
             if kind == "dedup":
@@ -184,8 +159,8 @@ def prune_graph(nodes: DataFrame, edges: DataFrame,
                 drops.append(filter_parents_without_children(
                     slim, removed, lang, *args))
 
-    keys = _ckpt(slim.join(reduce(DataFrame.unionByName, drops), "key_h",
-                           "left_anti").select("key_h", "node_key"))
+    keys = _ckpt(slim.join(reduce(DataFrame.unionByName, drops), "node_key",
+                           "left_anti").select("node_key"))
     # `keys` already encodes EVERY drop (slim was built from the filtered
     # node view, then lost every drop set), so the returned frames filter
     # the RAW CHECKPOINTED tables by keys alone — re-running the anti-join
@@ -193,20 +168,16 @@ def prune_graph(nodes: DataFrame, edges: DataFrame,
     # jobs recomputed each of them a second time and deepened the plans
     # Catalyst had to re-optimize (measured: 6.3 s zero-task planning gap
     # entering the final jobs).
-    payload = full if full is not None else nodes
-    nodes = payload.join(keys.select("key_h"), "key_h", "leftsemi")
+    nodes = full.join(keys, "node_key", "leftsemi")
 
-    # drop edges whose endpoints no longer exist (dangling after prunes) AND
-    # re-attach the canonical key strings in the same two joins; Neo4j MERGE
-    # enforces the consistency implicitly, the BTreeMap via remove_node.
-    # An edge whose endpoint was removed at ANY prune step has that
-    # endpoint's key_h absent from `keys`, so these inner joins subsume the
-    # anti-joins — raw `edges` in, identical rows out.
-    from .pipeline import EDGE_COLS
+    # drop edges whose endpoints no longer exist (dangling after prunes);
+    # Neo4j MERGE enforces the consistency implicitly, the BTreeMap via
+    # remove_node.  An edge whose endpoint was removed at ANY prune step
+    # has that endpoint's key absent from `keys`, so these semi-joins
+    # subsume the anti-joins.
     edges = (edges
-             .join(keys.select(F.col("key_h").alias("src_h"),
-                               F.col("node_key").alias("src_key")), "src_h")
-             .join(keys.select(F.col("key_h").alias("dst_h"),
-                               F.col("node_key").alias("dst_key")), "dst_h")
-             .select(*EDGE_COLS))
+             .join(keys.withColumnRenamed("node_key", "src_key"), "src_key",
+                   "leftsemi")
+             .join(keys.withColumnRenamed("node_key", "dst_key"), "dst_key",
+                   "leftsemi"))
     return nodes, edges

@@ -139,7 +139,7 @@ def test_prune_keys_plan_grows_additively(spark, plan_log, monkeypatch):
         monkeypatch.setattr(prune, "CLEAN_DIRECTIVES",
                             {**base, **dict(extra[:i])})
         del plan_log[:]
-        prune.prune_graph(nodes_df, edges_df, slim=slim)
+        prune.prune_graph(slim, edges_df, nodes_df, prune.CLEAN_DIRECTIVES)
         sizes.append(plan_log[0])          # keys: the first materialization
     d1, d2 = sizes[1] - sizes[0], sizes[2] - sizes[1]
     assert 0 < d1 == d2 < sizes[0] / 2, sizes

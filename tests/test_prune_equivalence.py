@@ -1,53 +1,53 @@
-"""prune_graph `full=` contract (round-7 optimization).
+"""prune_graph `full` contract.
 
 The final payload materialization may filter a SUPERSET table (the plain
 node checkpoint, before the instance-filter / endpoint-drop anti-joins)
 by the pruned key set, because `keys` is derived from the filtered view
-and therefore already excludes every dropped row.  This pins that the
-`full=` path returns exactly the same nodes and edges as the legacy path,
-across all three drop mechanisms (orphan prune, DataModel-vs-Class dedup,
-dangling-edge removal)."""
+and therefore already excludes every dropped row.  This pins that a
+superset `full` returns exactly the same nodes and edges as the filtered
+view itself, across all three drop mechanisms (orphan prune,
+DataModel-vs-Class dedup, dangling-edge removal)."""
 
-from pyspark.sql import functions as F
+from stakgraph_spark.prune import (CLEAN_DIRECTIVES, prune_graph,
+                                   prune_orphan_functions)
 
 
 def _mk_nodes(spark, rows):
     return spark.createDataFrame(
         rows,
-        "key_h long, node_key string, node_type string, repo string, "
+        "node_key string, node_type string, repo string, "
         "lang string, name string, file string, start long, end long, "
         "meta map<string,string>, body string")
 
 
 def _mk_edges(spark, rows):
+    """Edge rows name their endpoints by number n, keyed "k{n}"."""
     return spark.createDataFrame(
-        rows,
-        "src_h long, dst_h long, edge_type string, operand string, "
+        [(f"k{s}", f"k{d}", *rest) for s, d, *rest in rows],
+        "src_key string, dst_key string, edge_type string, operand string, "
         "confidence double, strategy string, repo string, lang string")
 
 
 def test_prune_full_superset_equivalence(spark):
-    from stakgraph_spark.prune import prune_graph
-
     r, l = "repo", "python"
     filtered = [
         # survives: ordinary function with a Calls edge
-        (1, "k1", "Function", r, l, "f_keep", "a.py", 1, 5, {}, "b1"),
+        ("k1", "Function", r, l, "f_keep", "a.py", 1, 5, {}, "b1"),
         # survives: nesting parent
-        (2, "k2", "Function", r, l, "f2", "a.py", 10, 30, {}, "b2"),
+        ("k2", "Function", r, l, "f2", "a.py", 10, 30, {}, "b2"),
         # orphan-pruned: nested in f2, no protecting edges
-        (3, "k3", "Function", r, l, "f_orphan", "a.py", 12, 14, {}, "b3"),
+        ("k3", "Function", r, l, "f_orphan", "a.py", 12, 14, {}, "b3"),
         # survives: Class with Operand evidence
-        (4, "k4", "Class", r, l, "X", "m.py", 1, 9, {}, "b4"),
+        ("k4", "Class", r, l, "X", "m.py", 1, 9, {}, "b4"),
         # dedup-dropped: DataModel shadowed by the Operand-bearing Class
-        (5, "k5", "DataModel", r, l, "X", "m.py", 1, 9, {}, "b5"),
+        ("k5", "DataModel", r, l, "X", "m.py", 1, 9, {}, "b5"),
     ]
     # the superset additionally carries a row the pipeline's upstream
     # anti-joins removed (e.g. a java instance-filter hit) — it is absent
     # from the filtered view, hence from slim, hence from keys, and must
-    # not resurface through the full= path
+    # not resurface through a superset `full`
     superset = filtered + [
-        (6, "k6", "Instance", r, l, "ghost", "m.py", 3, 3, {}, "b6"),
+        ("k6", "Instance", r, l, "ghost", "m.py", 3, 3, {}, "b6"),
     ]
     edges = [
         (3, 2, "NestedIn", None, None, None, r, l),   # orphan marker
@@ -60,17 +60,18 @@ def test_prune_full_superset_equivalence(spark):
     nodes_s = _mk_nodes(spark, superset)
     edges_df = _mk_edges(spark, edges)
 
-    legacy_n, legacy_e = prune_graph(nodes_f, edges_df)
-    new_n, new_e = prune_graph(nodes_f, edges_df, full=nodes_s)
+    slim = nodes_f.drop("body")
+    own_n, own_e = prune_graph(slim, edges_df, nodes_f, CLEAN_DIRECTIVES)
+    new_n, new_e = prune_graph(slim, edges_df, nodes_s, CLEAN_DIRECTIVES)
 
-    legacy_nodes = sorted(map(tuple, legacy_n.collect()))
+    own_nodes = sorted(map(tuple, own_n.collect()))
     new_nodes = sorted(map(tuple, new_n.collect()))
-    assert legacy_nodes == new_nodes
+    assert own_nodes == new_nodes
     assert sorted(r["node_key"] for r in new_n.collect()) == ["k1", "k2", "k4"]
 
-    legacy_edges = sorted(map(tuple, legacy_e.collect()))
+    own_edges = sorted(map(tuple, own_e.collect()))
     new_edges = sorted(map(tuple, new_e.collect()))
-    assert legacy_edges == new_edges
+    assert own_edges == new_edges
     kept = {(r["src_key"], r["dst_key"], r["edge_type"])
             for r in new_e.collect()}
     assert kept == {("k4", "k1", "Operand"), ("k1", "k2", "Calls")}
@@ -83,7 +84,7 @@ def _mixed_fixture():
     r = "repo"
 
     def n(k, t, lang, name, file, start, end, meta=None):
-        return (k, f"k{k}", t, r, lang, name, file, start, end,
+        return (f"k{k}", t, r, lang, name, file, start, end,
                 meta or {}, f"b{k}")
 
     nodes = [
@@ -134,49 +135,45 @@ def _sequential_keys(nodes, edges, removed):
     """The directives applied one after another, each to the previous
     result, over the post-orphan node list (the Operand evidence excludes
     edges whose dst was orphan-pruned)."""
-    from stakgraph_spark.prune import CLEAN_DIRECTIVES
-
     live = [x for x in nodes if x[0] not in removed]
-    evidence = {s for s, d, t, *_ in edges
-                if t == "Operand" and d not in removed}
+    evidence = {f"k{s}" for s, d, t, *_ in edges
+                if t == "Operand" and f"k{d}" not in removed}
     for lang, directives in CLEAN_DIRECTIVES.items():
         for kind, *args in directives:
             if kind == "dedup":
                 remove_t, keep_t = args
-                keep = {(x[3], x[5], x[6]) for x in live
-                        if x[2] == keep_t and x[4] == lang
+                keep = {(x[2], x[4], x[5]) for x in live
+                        if x[1] == keep_t and x[3] == lang
                         and x[0] in evidence}
                 live = [x for x in live
-                        if not (x[2] == remove_t and x[4] == lang
-                                and (x[3], x[5], x[6]) in keep)]
+                        if not (x[1] == remove_t and x[3] == lang
+                                and (x[2], x[4], x[5]) in keep)]
             else:
                 parent_t, child_t, key = args
-                names = {(x[3], x[9].get(key)) for x in live
-                         if x[2] == child_t and x[4] == lang}
+                names = {(x[2], x[8].get(key)) for x in live
+                         if x[1] == child_t and x[3] == lang}
                 live = [x for x in live
-                        if not (x[2] == parent_t and x[4] == lang
-                                and (x[3], x[5]) not in names)]
-    return {x[1] for x in live}
+                        if not (x[1] == parent_t and x[3] == lang
+                                and (x[2], x[4]) not in names)]
+    return {x[0] for x in live}
 
 
 def test_prune_directives_match_sequential(spark):
-    from stakgraph_spark.prune import prune_graph, prune_orphan_functions
-
     nodes, edges = _mixed_fixture()
     nodes_df, edges_df = _mk_nodes(spark, nodes), _mk_edges(spark, edges)
-    removed = {r["key_h"] for r in
+    removed = {r["node_key"] for r in
                prune_orphan_functions(nodes_df, edges_df).collect()}
-    assert removed == {14, 24}
+    assert removed == {"k14", "k24"}
     want = _sequential_keys(nodes, edges, removed)
     # every directive fired: X (python dedup), Lonely + Ghost (go),
     # Unused + Svc (rust)
-    assert {x[1] for x in nodes} - want - {"k14", "k24"} == {
+    assert {x[0] for x in nodes} - want - {"k14", "k24"} == {
         "k12", "k22", "k23", "k32", "k33"}
 
-    out_n, out_e = prune_graph(nodes_df, edges_df)
+    out_n, out_e = prune_graph(nodes_df, edges_df, nodes_df,
+                               CLEAN_DIRECTIVES)
     assert {r["node_key"] for r in out_n.collect()} == want
-    key = {x[0]: x[1] for x in nodes}
     assert {(r["src_key"], r["dst_key"], r["edge_type"])
             for r in out_e.collect()} == {
-        (key[s], key[d], t) for s, d, t, *_ in edges
-        if key[s] in want and key[d] in want}
+        (f"k{s}", f"k{d}", t) for s, d, t, *_ in edges
+        if f"k{s}" in want and f"k{d}" in want}

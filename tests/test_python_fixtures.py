@@ -31,9 +31,9 @@ def test_python_fixture(py_graph, fixture):
 
 
 def test_no_surrogate_leak(py_graph):
-    """The link/prune plane joins on 8-byte xxhash64 key surrogates
-    (pipeline.EDGE_COLS_H); the PUBLIC graph schema must stay string-keyed —
-    surrogate columns must never reach graph_nodes/graph_edges."""
+    """The public graph schema is string-keyed: nodes carry node_key, edges
+    src_key/dst_key, and no hashed key column (key_h / src_h / dst_h)
+    reaches graph_nodes/graph_edges."""
     nodes, edges = py_graph
     assert not {"key_h", "src_h", "dst_h"} & set(nodes.columns), nodes.columns
     assert not {"key_h", "src_h", "dst_h"} & set(edges.columns), edges.columns
